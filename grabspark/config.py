@@ -23,14 +23,20 @@ class BloomConfig:
     # PartitionedBloom).  "cuckoo": same sharded/manifested layout but a
     # cuckoo filter (cuckoo.PartitionedCuckoo) — supports per-key DELETE
     # for TTL re-crawl (n_bits is reinterpreted as a 16-bit-slot budget).
+    # Every mode is size-gated: the engine neither probes nor updates the
+    # filter while the seen table fits Spark's broadcast threshold
+    # (spark.sql.adaptive.autoBroadcastJoinThreshold, else
+    # spark.sql.autoBroadcastJoinThreshold; -1 = always filter) and builds
+    # it from the seen table the first round it does not.
     mode: str = "broadcast"
     # saturation guard: when the filter's estimated false-positive rate
     # (from its insertion count) exceeds this, the engine BYPASSES the
     # prefilter for the round — the exact anti-join is unaffected, but a
     # saturated filter's probe is pure overhead that prunes nothing
     # (measured ~45% of round wall-time at fpp~1.0).  At 0.25 the probe
-    # still prunes >=75% of the certain-new majority.  Bloom modes only;
-    # cuckoo signals fullness by failing inserts instead of degrading.
+    # still prunes >=75% of the certain-new majority.  Bloom modes only,
+    # and only once the size gate has built the filter; cuckoo signals
+    # fullness by failing inserts instead of degrading.
     max_fpp: float = 0.25
 
 

@@ -14,12 +14,14 @@ execution (SURVEY.md §3.1).
 Round dataflow:
     frontier_r
       -> A1 within-round first-occurrence dedupe        (groupBy + min_by)
-      -> J2 Bloom prefilter (advisory)                   (broadcast + Arrow UDF)
+      -> J2 seen filter (advisory), size-gated: skipped   (broadcast + Arrow UDF)
+         while seen fits Spark's broadcast threshold,
+         built once from seen when it first outgrows it
       -> J1 exact anti-join vs seen table                (left_anti)
       -> X3 robots filter + W1 per-host budget rank      (broadcast join + window)
       -> W2 fetch_seq assignment                         (window / distributed)
       -> J3 fetch lookup join + X4/X5 validate           (join + mapInPandas)
-      -> append trace, append seen, update Bloom
+      -> append trace, append seen, update the seen filter (if built)
       -> X1/P4/P6 links -> frontier_{r+1} (+ deferred)   (explode + anti-join)
       -> A2 metrics, CK1 snapshot commit
 
@@ -33,12 +35,11 @@ tables back to those versions, reloads the Bloom snapshot, and continues
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from . import robots as robots_mod
 from . import seq as seq_mod
@@ -50,6 +51,23 @@ from .metrics import METRICS_SCHEMA, host_metrics, partition_lineage, round_coun
 from .seen import SEEN_SCHEMA
 from .snapshots import SnapshotTable
 from . import urlkit
+
+
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
+               "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
+               "p": 1 << 50, "pb": 1 << 50}
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The size up to which Spark broadcasts a join side, in bytes: the
+    AQE threshold when set, else the static one; -1 = broadcast off."""
+    raw = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
+    if raw is None:
+        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    m = re.fullmatch(r"(-?)(\d+)([a-z]*)", raw.strip().lower())
+    if m is None or m.group(3) not in _BYTE_UNITS:
+        raise ValueError(f"unparsable broadcast threshold {raw!r}")
+    return int(m.group(1) + m.group(2)) * _BYTE_UNITS[m.group(3)]
 
 
 def _drain_futures(*futs) -> None:
@@ -217,6 +235,8 @@ class CrawlEngine:
         Bloom rebuilds from the remaining rows (the rebuild cost is why
         cuckoo is the TTL mode); partitioned Bloom can neither delete
         nor cheaply rebuild in place -> ValueError directing to cuckoo.
+        A filter the size gate has not built yet needs no maintenance:
+        only the seen rows are deleted.
         """
         from . import udfs
         from .cuckoo import PartitionedCuckoo
@@ -232,27 +252,21 @@ class CrawlEngine:
         if n_exp == 0:
             expired.unpersist()
             return self.run()
-        seen_v = self.seen.delete_where(cond)
-        bloom_v = int(meta["bloom_v"])
-        if isinstance(self.pbloom, PartitionedCuckoo):
-            bloom_v = self.pbloom.delete(
-                expired.withColumn("_bk", self._bloom_key()), "_bk"
-            )
-        elif self.pbloom is not None:
+        if self.pbloom is not None and not isinstance(self.pbloom, PartitionedCuckoo):
+            expired.unpersist()
             raise ValueError(
                 "partitioned Bloom cannot delete keys; use "
                 "BloomConfig(mode='cuckoo') for TTL re-crawl"
             )
-        elif self.bloom is not None:
-            fresh = ShardedBloom(self.bloom.n_bits, self.bloom.n_hashes, self.bloom.n_shards)
-            partials = build_partials(
-                self.seen.read(seen_v).withColumn("_bk", self._bloom_key()),
-                "_bk", fresh.n_bits, fresh.n_hashes, fresh.n_shards,
-            ).collect()
-            merge_partials_into(fresh, partials)
-            bloom_v += 1
-            fresh.save(self._bloom_dir(bloom_v))
-            self.bloom = fresh
+        seen_v = self.seen.delete_where(cond)
+        bloom_v = int(meta["bloom_v"])
+        if bloom_v > 0 and self.pbloom is not None:
+            bloom_v = self.pbloom.delete(
+                expired.withColumn("_bk", self._bloom_key()), "_bk"
+            )
+        elif bloom_v > 0 and self.bloom is not None:
+            self.bloom = ShardedBloom(self.bloom.n_bits, self.bloom.n_hashes, self.bloom.n_shards)
+            bloom_v = self._bloom_broadcast_update(self.seen.read(seen_v), bloom_v)
         rnd = int(meta["round"])
         rows = (
             expired.withColumn("_p", udfs.url_parts_udf(F.col("url_canon")))
@@ -345,8 +359,27 @@ class CrawlEngine:
         # layout that removes the seen-side exchange too).
         cand = dedupe_first_occurrence(f.repartition("url_canon"))
         seen_df = self.seen.read(meta["seen_v"]).select("seed_idx", "url_canon")
+        counters: dict[str, float] = {"frontier_in": self.frontier.row_count()}
 
-        # J2 Bloom prefilter: definitely-new rows skip the exact anti-join.
+        # J2 seen filter: definitely-new rows skip the exact anti-join.
+        # Size gate: while the pinned seen snapshot fits Spark's broadcast
+        # threshold, J1 is a broadcast hash probe a filter cannot beat,
+        # and the filter's probe and update are pure Python-stage cost —
+        # the round skips both.  The first round past the threshold
+        # builds the filter once from that snapshot; from then on it is
+        # built (bloom_v > 0) and stays on.
+        flt = self.bloom if self.bloom is not None else self.pbloom
+        bloom_v = int(meta["bloom_v"])
+        filter_on = flt is not None and not self._seen_filter_gated(meta)
+        if flt is not None and not filter_on:
+            counters["seen_filter_gated"] = 1.0
+        if filter_on and bloom_v == 0:
+            # an empty snapshot needs no build: the v0 filter is exact for it
+            n_seen = self.seen.row_count(meta["seen_v"])
+            if n_seen > 0:
+                bloom_v = self._seen_filter_insert(self.seen.read(meta["seen_v"]), bloom_v)
+                counters["seen_filter_built_keys"] = n_seen
+
         # Saturation guard: a fixed-size filter fills as the seen set
         # grows; past BloomConfig.max_fpp its probe is (near-)pure
         # overhead — everything flows to the exact anti-join anyway — so
@@ -354,10 +387,8 @@ class CrawlEngine:
         # Bypass never affects results (the prefilter is advisory; the
         # anti-join below is exact either way).  est_fpp is O(1) from the
         # filter's maintained insertion count.
-        tagged = None
-        use_prefilter = (self.bloom is not None or self.pbloom is not None) and rnd > 0
+        use_prefilter = filter_on and rnd > 0
         if use_prefilter:
-            flt = self.bloom if self.bloom is not None else self.pbloom
             est = getattr(flt, "est_fpp", None)
             if est is not None and est() > cfg.bloom.max_fpp:
                 use_prefilter = False
@@ -415,9 +446,8 @@ class CrawlEngine:
             sched_pre, seq_bases, cfg.seq_window_threshold, cfg.seq_partitions
         )
         trace_v, seen_v, metrics_v = meta["trace_v"], meta["seen_v"], meta["metrics_v"]
-        bloom_v_new = meta["bloom_v"]
         new_seq = dict(meta.get("seq", {}))
-        counters: dict[str, float] = {"frontier_in": self.frontier.row_count(), "scheduled": n_sched}
+        counters["scheduled"] = n_sched
         if rnd in self.prefilter_bypassed_rounds:
             counters["bloom_prefilter_bypassed"] = 1.0
 
@@ -448,14 +478,10 @@ class CrawlEngine:
                 # threads) and serialize only the manifest commits.  The
                 # per-round blocking chain is the Amdahl floor that caps N->4N
                 # scaling efficiency (VERDICT r2 #5).
-                if self.bloom is not None:
-                    # partials collect + driver-side merge overlaps the
-                    # seen/links chain; bloom_v is only read at the commit
-                    fut_bloom = self._pool.submit(self._bloom_broadcast_update, batch, rnd)
-                elif self.pbloom is not None:
-                    fut_bloom = self._pool.submit(
-                        self.pbloom.update, batch.withColumn("_bk", self._bloom_key()), "_bk"
-                    )
+                if filter_on:
+                    # the filter update overlaps the seen/links chain;
+                    # bloom_v is only read at the commit
+                    fut_bloom = self._pool.submit(self._seen_filter_insert, batch, bloom_v)
 
                 seen_v = self.seen.append(newseen)
                 seen_all = self.seen.read(seen_v).select("seed_idx", "url_canon")
@@ -504,7 +530,7 @@ class CrawlEngine:
         if fut_metrics is not None:
             metrics_v = fut_metrics.result()
         if fut_bloom is not None:
-            bloom_v_new = fut_bloom.result()
+            bloom_v = fut_bloom.result()
 
         if cfg.compact_every is not None and (rnd + 1) % cfg.compact_every == 0:
             # small-file control (Iceberg rewrite_data_files): one
@@ -526,7 +552,7 @@ class CrawlEngine:
                 "seen_v": seen_v,
                 "trace_v": trace_v,
                 "metrics_v": metrics_v,
-                "bloom_v": bloom_v_new,
+                "bloom_v": bloom_v,
             },
         )
         # drop all round-local caches (the fused seq assignment's range-
@@ -534,7 +560,27 @@ class CrawlEngine:
         # cached across rounds
         self.spark.catalog.clearCache()
 
-    def _bloom_broadcast_update(self, batch: DataFrame, rnd: int) -> int:
+    def _seen_filter_gated(self, meta: dict) -> bool:
+        """True while the filter is unbuilt and the pinned seen snapshot
+        is no bigger than the broadcast threshold (-1: never gated).  It
+        reads only committed state and the session conf, so a resumed
+        round under the same conf decides the same way."""
+        if int(meta["bloom_v"]) > 0:
+            return False
+        limit = broadcast_threshold(self.spark)
+        return limit >= 0 and self.seen.data_bytes(meta["seen_v"]) <= limit
+
+    def _seen_filter_insert(self, keys: DataFrame, bloom_v: int) -> int:
+        """Insert ``(seed_idx, url_canon)`` rows into the filter at
+        ``bloom_v``; returns the new version."""
+        if self.bloom is not None:
+            return self._bloom_broadcast_update(keys, bloom_v)
+        return self.pbloom.update(keys.withColumn("_bk", self._bloom_key()), "_bk")
+
+    def _bloom_broadcast_update(self, batch: DataFrame, bloom_v: int) -> int:
+        # the saved version follows bloom_v, not the round number: a TTL
+        # re-crawl also bumps bloom_v, so a round-numbered save could
+        # overwrite the version a committed round pins
         partials = build_partials(
             batch.withColumn("_bk", self._bloom_key()),
             "_bk",
@@ -543,8 +589,8 @@ class CrawlEngine:
             self.bloom.n_shards,
         ).collect()
         merge_partials_into(self.bloom, partials)
-        self.bloom.save(self._bloom_dir(rnd + 1))
-        return rnd + 1
+        self.bloom.save(self._bloom_dir(bloom_v + 1))
+        return bloom_v + 1
 
     # -- W1 ------------------------------------------------------------------
 

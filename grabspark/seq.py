@@ -78,11 +78,15 @@ def assign_fetch_seq_counted(
 
 
 def _base_expr(seq_bases: dict[int, int]):
-    expr = F.lit(0)
-    for seed, base in seq_bases.items():
-        if base:
-            expr = F.when(F.col("seed_idx") == seed, F.lit(base)).otherwise(expr)
-    return expr
+    """Per-seed sequence base as ONE expression, built with a single
+    py4j call whatever the seed count (a ``when`` chain costs several
+    calls per seed, every round): an array literal indexed by
+    ``seed_idx``, O(1) per row; a seed past its end reads 0."""
+    top = max((s for s, b in seq_bases.items() if b), default=-1)
+    if top < 0:
+        return F.lit(0)
+    arr = ",".join(f"{int(seq_bases.get(s, 0))}L" for s in range(top + 1))
+    return F.expr(f"coalesce(try_element_at(array({arr}), seed_idx + 1), 0L)")
 
 
 def _assign_window(df: DataFrame, seq_bases: dict[int, int]) -> DataFrame:

@@ -47,6 +47,10 @@ def _serialized(fn):
     return wrapper
 
 
+def _file_bytes(files: list[str]) -> int:
+    return sum(os.path.getsize(f) for f in files)
+
+
 class SnapshotTable:
     def __init__(
         self,
@@ -98,6 +102,15 @@ class SnapshotTable:
         m = self.manifest(version)
         return 0 if m is None else int(m.get("rows", 0))
 
+    def data_bytes(self, version: int | None = None) -> int:
+        """Total size of the snapshot's data files: O(1) from the
+        manifest; a manifest written without the total stats its files."""
+        m = self.manifest(version)
+        if m is None:
+            return 0
+        b = m.get("bytes")
+        return int(b) if b is not None else _file_bytes(m["files"])
+
     def _commit(
         self,
         files: list[str],
@@ -106,7 +119,10 @@ class SnapshotTable:
         parent: int | None,
         added: list[str] | None = None,
         parts: dict | None = None,
+        nbytes: int | None = None,
     ) -> int:
+        """``nbytes`` is the data-file total when the caller knows it;
+        otherwise the files are stat'ed."""
         v = 0 if parent is None else parent + 1
         manifest = {
             "version": v,
@@ -114,6 +130,7 @@ class SnapshotTable:
             "files": files,
             "added": added if added is not None else files,
             "rows": rows,
+            "bytes": _file_bytes(files) if nbytes is None else int(nbytes),
             "meta": meta,
             # per-file partition value (bucket) — the manifest-level
             # pruning index for read(bucket=...)
@@ -191,11 +208,14 @@ class SnapshotTable:
         files, rows, parts = self._write_batch(self._align(df))
         all_files = (prev["files"] if prev else []) + files
         all_rows = (prev["rows"] if prev else 0) + rows
+        all_bytes = self.data_bytes(parent) + _file_bytes(files)
         all_parts = dict(prev.get("parts", {}) if prev else {})
         all_parts.update(parts)
         m = dict(prev["meta"] if prev else {})
         m.update(meta or {})
-        return self._commit(all_files, all_rows, m, parent, added=files, parts=all_parts)
+        return self._commit(
+            all_files, all_rows, m, parent, added=files, parts=all_parts, nbytes=all_bytes
+        )
 
     @_serialized
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
@@ -229,7 +249,8 @@ class SnapshotTable:
         if m is None:
             raise ValueError(f"no snapshot v{version} in {self.path}")
         return self._commit(
-            m["files"], m["rows"], m.get("meta", {}), parent, added=[], parts=m.get("parts", {})
+            m["files"], m["rows"], m.get("meta", {}), parent, added=[],
+            parts=m.get("parts", {}), nbytes=self.data_bytes(version),
         )
 
     @_serialized
@@ -241,7 +262,10 @@ class SnapshotTable:
         rows = prev["rows"] if prev else 0
         m = dict(prev["meta"] if prev else {})
         m.update(meta)
-        return self._commit(files, rows, m, parent, parts=prev.get("parts", {}) if prev else {})
+        return self._commit(
+            files, rows, m, parent, parts=prev.get("parts", {}) if prev else {},
+            nbytes=self.data_bytes(parent),
+        )
 
     # -- row-level ops (copy-on-write, Iceberg MERGE/DELETE-shaped) ----------
 
@@ -273,7 +297,7 @@ class SnapshotTable:
         else:
             rewrite_files = list(prev["files"])
         old = (
-            self.spark.read.parquet(*rewrite_files)
+            self._read_files(rewrite_files)
             if rewrite_files
             else self.spark.createDataFrame([], self.schema())
         )
@@ -315,7 +339,7 @@ class SnapshotTable:
             # one task per live bucket -> exactly one file per bucket
             df = df.repartition(F.col(self.partition_col))
         else:
-            total = sum(os.path.getsize(f) for f in prev["files"])
+            total = self.data_bytes(parent)
             df = df.repartition(max(1, -(-total // target_file_bytes)))
         files, rows, parts = self._write_batch(df)
         m = dict(prev["meta"])
@@ -420,7 +444,7 @@ class SnapshotTable:
             files = [f for f in files if parts.get(f) == bucket]
             if not files:
                 return self.spark.createDataFrame([], self.schema())
-        return self.spark.read.parquet(*files)
+        return self._read_files(files)
 
     def files_for_bucket(self, bucket: int, version: int | None = None) -> list[str]:
         m = self.manifest(version) or {"files": [], "parts": {}}
@@ -435,4 +459,13 @@ class SnapshotTable:
         added = m.get("added", m["files"])
         if not added:
             return self.spark.createDataFrame([], self.schema())
-        return self.spark.read.parquet(*added)
+        return self._read_files(added)
+
+    def _read_files(self, files: list[str]) -> DataFrame:
+        """Read with the committed schema: without one, Spark runs a
+        schema-inference job on every read.  (A snapshot of more files
+        than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        still pays Spark's parallel file-listing job.)"""
+        schema = self.schema()
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*files)

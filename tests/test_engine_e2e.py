@@ -2,8 +2,11 @@
 oracle's (sequential Go transliteration) exact fetch order, seen set, and
 page records [REF-EXACT], plus the input_hint per-row image invariant."""
 
+import os
 import tempfile
+from contextlib import contextmanager
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +26,29 @@ def crawl_setup(spark, tmp_path_factory):
     seeds = synth.default_seeds(spec)
     golden = oracle.crawl(store.by_id, seeds)
     return spec, store, store_path, seeds, golden, base
+
+
+@contextmanager
+def broadcast_threshold(spark, value):
+    """Scoped ``spark.sql.autoBroadcastJoinThreshold`` (restored after),
+    the size the engine's seen-filter gate compares the seen table to."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+@pytest.fixture()
+def filter_forced_on(spark):
+    """Broadcast off: the seen filter engages from the first round."""
+    with broadcast_threshold(spark, -1):
+        yield
 
 
 def run_engine(spark, store_path, seeds, run_dir, **cfg_kw):
@@ -124,7 +150,7 @@ def test_bloom_disabled_same_result(spark, crawl_setup):
     assert got == [tuple(t) for t in golden.trace]
 
 
-def test_bloom_saturation_bypass_same_result(spark, crawl_setup):
+def test_bloom_saturation_bypass_same_result(spark, crawl_setup, filter_forced_on):
     """A deliberately-undersized Bloom saturates once the first rounds'
     seen keys are inserted; the saturation guard (BloomConfig.max_fpp)
     must then BYPASS the probe — est_fpp is O(1) from the maintained
@@ -152,7 +178,7 @@ def test_bloom_saturation_bypass_same_result(spark, crawl_setup):
     assert int(n_bypassed or 0) == len(eng.prefilter_bypassed_rounds)
 
 
-def test_bloom_partitioned_same_result(spark, crawl_setup):
+def test_bloom_partitioned_same_result(spark, crawl_setup, filter_forced_on):
     """J2 partitioned mode (BloomConfig mode='partitioned'): per-shard
     files built/probed executor-side must leave the [REF-EXACT] trace
     untouched (advisory-filter invariant, now for the scale mode)."""
@@ -168,9 +194,15 @@ def test_bloom_partitioned_same_result(spark, crawl_setup):
     assert got == [tuple(t) for t in golden.trace]
     # the filter actually exists on disk as per-shard files
     assert eng.pbloom is not None and len(eng.pbloom.shard_files()) > 0
+    # it cannot delete keys: a TTL re-crawl is refused before any seen
+    # row is deleted
+    seen_v = eng.seen.current_version()
+    with pytest.raises(ValueError, match="cannot delete keys"):
+        eng.expire_and_recrawl(F.col("seed_idx") == 0)
+    assert eng.seen.current_version() == seen_v
 
 
-def test_bloom_cuckoo_same_result(spark, crawl_setup):
+def test_bloom_cuckoo_same_result(spark, crawl_setup, filter_forced_on):
     """J2-alt cuckoo mode (BloomConfig mode='cuckoo'): the deletable
     filter must leave the [REF-EXACT] trace untouched (advisory-filter
     invariant), with shard files on disk like the partitioned Bloom."""
@@ -386,24 +418,15 @@ def test_engine_oracle_equivalence_shapes(spark, tmp_path, shape):
     assert got_seen == golden.seen
 
 
-def test_expire_and_recrawl_cuckoo(spark, crawl_setup):
-    """TTL re-crawl through the deletable cuckoo filter: expired URLs
-    are re-fetched exactly once, in original fetch order; still-seen
-    URLs (including links re-extracted from re-fetched pages) are not;
-    the seen table ends fully repopulated."""
-    spec, store, store_path, seeds, golden, base = crawl_setup
-    eng = run_engine(
-        spark,
-        store_path,
-        seeds,
-        base / "run_ttl",
-        bloom=BloomConfig(enabled=True, mode="cuckoo", n_bits=1 << 16, n_shards=8),
-    )
+def expire_one_host_and_check(eng):
+    """Expire seed 0's URLs on one host and re-crawl: expired URLs are
+    re-fetched exactly once, in original fetch order; still-seen URLs
+    (including links re-extracted from re-fetched pages) are not; the
+    seen table ends fully repopulated."""
     trace_before = engine_trace_rows(eng)
     seen_before = {
         (r.seed_idx, r.url_canon) for r in eng.seen.read().collect()
     }
-    # expire one host's URLs for seed 0
     host = trace_before[0][4]
     pred = (F.col("seed_idx") == 0) & F.col("url_canon").contains(f"//{host}/")
     expired = sorted(
@@ -426,6 +449,19 @@ def test_expire_and_recrawl_cuckoo(spark, crawl_setup):
     seen_after = {(r.seed_idx, r.url_canon) for r in eng.seen.read().collect()}
     assert seen_after == seen_before
     assert len(trace_after) == len(trace_before) + len(expired)
+
+
+def test_expire_and_recrawl_cuckoo(spark, crawl_setup, filter_forced_on):
+    """TTL re-crawl through the deletable cuckoo filter."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    eng = run_engine(
+        spark,
+        store_path,
+        seeds,
+        base / "run_ttl",
+        bloom=BloomConfig(enabled=True, mode="cuckoo", n_bits=1 << 16, n_shards=8),
+    )
+    expire_one_host_and_check(eng)
 
 
 def test_compact_every_trace_exact_and_fewer_files(spark, crawl_setup):
@@ -542,3 +578,219 @@ def test_engine_robots_wildcard_e2e(spark, crawl_setup, tmp_path):
     # denied URLs are not in the seen table either (re-evaluated, not marked)
     seen = {r.url_canon for r in eng.seen.read().select("url_canon").collect()}
     assert not {u for u in seen if re.match(r".*://" + re.escape(host0) + r"/p.*3$", u)}
+
+
+# ---------------------------------------------------------------------------
+# Seen-filter size gate: the filter is neither probed nor updated while the
+# seen table fits the broadcast threshold, and is built once from the seen
+# table the first round it does not.
+
+_FILTER_MODES = {
+    "broadcast": BloomConfig(enabled=True),
+    "partitioned": BloomConfig(enabled=True, mode="partitioned", n_bits=1 << 16, n_shards=8),
+    "cuckoo": BloomConfig(enabled=True, mode="cuckoo", n_bits=1 << 16, n_shards=8),
+}
+
+
+def round_metric(eng, metric) -> dict[int, float]:
+    return {
+        r["round"]: r["value"]
+        for r in eng.metrics_df()
+        .filter((F.col("scope") == "round") & (F.col("metric") == metric))
+        .collect()
+    }
+
+
+def pinned_seen(eng) -> dict[int, tuple[int, int]]:
+    """Round -> (bytes, rows) of the seen snapshot its start pins."""
+    out = {}
+    for v in range(eng.frontier.current_version() + 1):
+        m = eng.frontier.meta(v)
+        out[int(m["round"])] = (eng.seen.data_bytes(m["seen_v"]), eng.seen.row_count(m["seen_v"]))
+    return out
+
+
+def filter_key_count(eng) -> int:
+    """Keys the seen filter holds: Bloom insertions, or occupied cuckoo
+    slots (one per inserted, not deleted key)."""
+    from grabspark.cuckoo import PartitionedCuckoo
+
+    if isinstance(eng.pbloom, PartitionedCuckoo):
+        return sum(int((np.load(p) != 0).sum()) for p in eng.pbloom.shard_files().values())
+    return (eng.bloom or eng.pbloom).n_inserted
+
+
+def full_state(eng):
+    """Every trace column, the seen rows with first_seq, and the round
+    counters: what a resumed run must reproduce bit for bit."""
+    trace = [tuple(r) for r in eng.trace_df().orderBy("seed_idx", "fetch_seq").collect()]
+    seen = sorted(tuple(r) for r in eng.seen_df().collect())
+    counters = sorted(
+        (r["round"], r["metric"], r["value"])
+        for r in eng.metrics_df().filter(F.col("scope") == "round").collect()
+    )
+    return trace, seen, counters
+
+
+@pytest.fixture(scope="module")
+def crossing_threshold(engine_run):
+    """A threshold the seen table outgrows mid-crawl: between the bytes
+    rounds 1 and 2 of the default run pin."""
+    pinned = pinned_seen(engine_run)
+    assert max(pinned) >= 4, "the crawl must outlast the crossing"
+    assert pinned[1][0] < pinned[2][0]
+    return (pinned[1][0] + pinned[2][0]) // 2
+
+
+@pytest.fixture(scope="module")
+def crossing_runs(spark, crawl_setup, crossing_threshold):
+    """One straight crawl per filter mode under the crossing threshold."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    runs = {}
+    with broadcast_threshold(spark, crossing_threshold):
+        for mode, bloom in _FILTER_MODES.items():
+            runs[mode] = run_engine(spark, store_path, seeds, base / f"run_cross_{mode}", bloom=bloom)
+    return runs
+
+
+def test_default_threshold_gates_every_round(engine_run):
+    """At the default broadcast threshold the small crawl never engages
+    the filter: every round is gated and nothing is built."""
+    n_rounds = int(engine_run.frontier.meta()["round"])
+    assert round_metric(engine_run, "seen_filter_gated") == {r: 1.0 for r in range(n_rounds)}
+    assert round_metric(engine_run, "seen_filter_built_keys") == {}
+    assert int(engine_run.frontier.meta()["bloom_v"]) == 0
+    assert engine_run.bloom.n_inserted == 0
+
+
+@pytest.mark.parametrize("mode", sorted(_FILTER_MODES))
+def test_seen_filter_built_once_at_crossing(crossing_runs, crawl_setup, crossing_threshold, mode):
+    *_, golden, _ = crawl_setup
+    eng = crossing_runs[mode]
+    assert engine_trace_rows(eng) == [tuple(t) for t in golden.trace]
+    seen = {(r.seed_idx, r.url_canon) for r in eng.seen_df().collect()}
+    assert seen == golden.seen
+    # gated exactly while the pinned seen snapshot fit the threshold,
+    # built once, from that snapshot, the first round it did not
+    n_rounds = int(eng.frontier.meta()["round"])
+    pinned = pinned_seen(eng)
+    cross = min(r for r in range(n_rounds) if pinned[r][0] > crossing_threshold)
+    assert 1 <= cross <= n_rounds - 2, "the crossing must fall mid-crawl"
+    assert round_metric(eng, "seen_filter_gated") == {r: 1.0 for r in range(cross)}
+    assert round_metric(eng, "seen_filter_built_keys") == {cross: float(pinned[cross][1])}
+    assert int(eng.frontier.meta()["bloom_v"]) > 0
+    # build + per-round updates inserted every seen key exactly once
+    assert filter_key_count(eng) == len(golden.seen)
+
+
+@pytest.mark.parametrize("mode", sorted(_FILTER_MODES))
+def test_torn_round_at_crossing_resumes_exact(spark, crawl_setup, crossing_runs, crossing_threshold, mode, tmp_path):
+    """Tear the build round after its filter build, trace, seen and
+    filter update have landed but before its frontier commit; resume
+    must rebuild from the pinned snapshot and end bit-identical to the
+    straight run."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    straight = crossing_runs[mode]
+    cross = min(round_metric(straight, "seen_filter_built_keys"))
+    run_dir = tmp_path / "run"
+    with broadcast_threshold(spark, crossing_threshold):
+        cfg = EngineConfig(
+            run_dir=str(run_dir), store_path=store_path, bloom=_FILTER_MODES[mode], max_rounds=cross
+        )
+        eng = CrawlEngine(spark, cfg)
+        eng.start(seeds)
+
+        def torn(*args, **kwargs):
+            raise RuntimeError("torn round")
+
+        eng.frontier.commit_prepared = torn
+        eng.cfg.max_rounds = None
+        with pytest.raises(RuntimeError, match="torn round"):
+            eng.run()
+        assert int(eng.frontier.meta()["round"]) == cross
+        assert int(eng.frontier.meta()["bloom_v"]) == 0
+
+        eng2 = CrawlEngine(spark, EngineConfig(
+            run_dir=str(run_dir), store_path=store_path, bloom=_FILTER_MODES[mode]
+        ))
+        eng2.resume()
+    assert full_state(eng2) == full_state(straight)
+    assert filter_key_count(eng2) == filter_key_count(straight)
+    if mode == "broadcast":
+        assert np.array_equal(eng2.bloom._bits, straight.bloom._bits)
+
+
+@pytest.mark.parametrize("mode", ["broadcast", "cuckoo"])
+def test_recrawl_before_and_after_filter_built(spark, crawl_setup, crossing_threshold, mode, tmp_path):
+    """TTL re-crawl on an unbuilt filter only deletes seen rows and the
+    filter stays unbuilt; on a built one it maintains the filter, which
+    ends holding exactly the seen keys."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    bloom = _FILTER_MODES[mode]
+    eng = run_engine(spark, store_path, seeds, tmp_path / "gated", bloom=bloom)
+    assert int(eng.frontier.meta()["bloom_v"]) == 0
+    expire_one_host_and_check(eng)
+    assert int(eng.frontier.meta()["bloom_v"]) == 0
+    assert filter_key_count(eng) == 0
+
+    with broadcast_threshold(spark, crossing_threshold):
+        eng = run_engine(spark, store_path, seeds, tmp_path / "built", bloom=bloom)
+        built_v = int(eng.frontier.meta()["bloom_v"])
+        assert built_v > 0
+        expire_one_host_and_check(eng)
+    assert int(eng.frontier.meta()["bloom_v"]) > built_v
+    assert filter_key_count(eng) == len(golden.seen)
+
+
+def test_recrawl_then_torn_round_keeps_pinned_bloom(spark, crawl_setup, filter_forced_on, tmp_path, monkeypatch):
+    """Broadcast filter versions are named from the pinned bloom_v: the
+    round after a TTL re-crawl must not overwrite the filter snapshot the
+    re-crawl's commit pins, so a resume after that round tears loads
+    exactly the filter the re-crawl saved."""
+    from grabspark import engine as engine_mod
+
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    run_dir = tmp_path / "run"
+    eng = run_engine(spark, store_path, seeds, run_dir)
+    saved = {}
+    straight_run = eng.run
+
+    def run_then_tear():
+        # the re-crawl's frontier commit has landed: keep the filter
+        # bytes it pins, then tear the next round before its commit
+        v = int(eng.frontier.meta()["bloom_v"])
+        with open(os.path.join(eng._bloom_dir(v), "bloom.npz"), "rb") as fh:
+            saved.update(v=v, npz=fh.read())
+        saved["bloom"] = engine_mod.ShardedBloom.load(eng._bloom_dir(v))
+
+        def torn(*args, **kwargs):
+            raise RuntimeError("torn round")
+
+        eng.frontier.commit_prepared = torn
+        return straight_run()
+
+    eng.run = run_then_tear
+    host = seeds[0].split("/")[2]
+    pred = (F.col("seed_idx") == 0) & F.col("url_canon").contains(f"//{host}/")
+    n_expired = eng.seen.read().filter(pred).count()
+    with pytest.raises(RuntimeError, match="torn round"):
+        eng.expire_and_recrawl(pred)
+    assert int(eng.frontier.meta()["bloom_v"]) == saved["v"]
+    with open(os.path.join(eng._bloom_dir(saved["v"]), "bloom.npz"), "rb") as fh:
+        assert fh.read() == saved["npz"]
+
+    loaded = []
+    load = engine_mod.ShardedBloom.load
+
+    def recording_load(dirpath):
+        b = load(dirpath)
+        loaded.append((b._bits.tobytes(), b.n_inserted))
+        return b
+
+    monkeypatch.setattr(engine_mod.ShardedBloom, "load", staticmethod(recording_load))
+    eng2 = CrawlEngine(spark, EngineConfig(run_dir=str(run_dir), store_path=store_path))
+    eng2.resume()
+    assert loaded[0] == (saved["bloom"]._bits.tobytes(), saved["bloom"].n_inserted)
+    seen = {(r.seed_idx, r.url_canon) for r in eng2.seen_df().collect()}
+    assert seen == golden.seen
+    assert eng2.trace.row_count() == len(golden.trace) + n_expired

@@ -3,6 +3,7 @@ matching (X3)."""
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,6 +93,27 @@ def test_window_and_distributed_seq_agree(spark, seq_frontier):
     # FIFO order: (-1, 0) sorts first within seed 1
     first = min(((k, v) for k, v in got.items() if k[0] == 1), key=lambda kv: kv[1])
     assert first[0][1] == "u1--1-0"
+
+
+def test_window_and_distributed_seq_agree_many_seeds(spark):
+    """The per-seed base expression at >=100 seeds: nonzero bases, zero
+    bases, seeds missing from the base map and a seed past its last key
+    all number identically on both paths, contiguously from the base."""
+    from grabspark.extract import FRONTIER_SCHEMA
+
+    n_seeds = 120
+    rows = [
+        (seed, f"u{seed}-{ps}", f"u{seed}-{ps}", "h", ps, 0, 0)
+        for seed in range(n_seeds)
+        for ps in (2, 0, 1)
+    ]
+    df = spark.createDataFrame(rows, FRONTIER_SCHEMA).repartition(5)
+    bases = {s: (s * 37) % 1000 for s in range(0, n_seeds - 10) if s % 7}
+    w = _seqs(seq_mod._assign_window(df, bases))
+    assert w == _seqs(seq_mod._assign_distributed(df, bases, 4))
+    for seed in range(n_seeds):
+        b = bases.get(seed, 0)
+        assert [w[(seed, f"u{seed}-{ps}")] for ps in (0, 1, 2)] == [b, b + 1, b + 2]
 
 
 def test_assign_auto_threshold(spark, seq_frontier):
@@ -433,3 +455,49 @@ def test_concurrent_same_table_commits_are_serialized(spark, tmp_path):
     assert len(set(mv)) == 8
     meta = t.meta()
     assert all(f"k{i}" in meta for i in range(8))
+
+
+def test_snapshot_reads_submit_no_spark_job(spark, tmp_path):
+    """read()/read_delta() use the committed schema, so building the
+    DataFrame runs no schema-inference job."""
+    from grabspark.seen import SEEN_SCHEMA
+
+    t = SnapshotTable(spark, str(tmp_path / "nojob"), SEEN_SCHEMA)
+    v0 = t.overwrite(spark.createDataFrame([(0, "a", 0, 0)], SEEN_SCHEMA))
+    v1 = t.append(spark.createDataFrame([(0, "b", 1, 1)], SEEN_SCHEMA))
+    sc = spark.sparkContext
+    group = f"snapshot-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot reads")
+    try:
+        frames = [t.read(), t.read(v0), t.read_delta(v1)]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the group does catch jobs: running the reads submits some
+        assert [f.count() for f in frames] == [2, 1, 1]
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(f.schema == SEEN_SCHEMA for f in frames)
+
+
+def test_snapshot_manifest_records_data_bytes(spark, tmp_path):
+    """Every commit records its data-file byte total; a manifest without
+    one falls back to stat-ing its files."""
+    t = SnapshotTable(spark, str(tmp_path / "bytes"))
+    df = lambda *vals: spark.createDataFrame([(v,) for v in vals], "x int")
+
+    def stat(v):
+        return sum(os.path.getsize(f) for f in t.manifest(v)["files"])
+
+    v0 = t.overwrite(df(1, 2))
+    v1 = t.append(df(3))
+    v2 = t.commit_meta({"note": "x"})
+    v3 = t.rollback(v0)
+    for v in (v0, v1, v2, v3):
+        assert t.manifest(v)["bytes"] == stat(v) == t.data_bytes(v)
+    assert t.data_bytes(v1) > t.data_bytes(v0) > 0
+    path = os.path.join(str(tmp_path / "bytes"), "snapshots", f"v{v1}.json")
+    m = json.load(open(path))
+    del m["bytes"]
+    json.dump(m, open(path, "w"))
+    assert t.data_bytes(v1) == stat(v1)
