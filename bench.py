@@ -142,6 +142,8 @@ HEADLINE = [
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from grabspark.session import driver_memory
+
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("grabspark-bench")
@@ -154,7 +156,7 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -123,12 +123,14 @@ def measure(data_dir: str, cores: int, out: str, mode: str = "validate") -> None
 
 
 def _submit(args: list[str], cores: int, zpath: str) -> None:
+    from grabspark.session import driver_memory
+
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
         # must be on the submit command line — builder config is too late
         # for a spark-submit-launched driver JVM
-        "--driver-memory", "24g",
+        "--driver-memory", driver_memory(),
         "--py-files", zpath,
         os.path.join(REPO, "bench_image_scaling.py"),
     ] + args

@@ -32,7 +32,7 @@ spark = (SparkSession.builder.master("local[{cpus}]")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.ui.enabled", "false")
          .config("spark.ui.showConsoleProgress", "false")
-         .config("spark.driver.memory", "24g")
+         .config("spark.driver.memory", {mem!r})
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from grabspark.session import attach_package
@@ -56,7 +56,9 @@ spark.stop()
 
 
 def run_one(name: str) -> float:
-    code = _CHILD.format(repo=REPO, cpus=CPUS, name=name, sf=SF_DIR)
+    from grabspark.session import driver_memory
+
+    code = _CHILD.format(repo=REPO, cpus=CPUS, name=name, sf=SF_DIR, mem=driver_memory())
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=900
     )

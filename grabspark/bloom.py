@@ -10,11 +10,9 @@ Representation: the bit space is split into ``n_shards`` independent
 numpy bit arrays.  Build is distributed — each partition emits its
 partial per-shard bitmaps via mapInPandas, the driver ORs them (bitmap
 OR is associative/commutative, so merge order is irrelevant) — and
-membership runs map-side from a broadcast.  At 10^10-frontier scale the
-same shards become per-bucket files co-partitioned with the seen table
-(partitioned mode, keyed by pmod(hash(key), shards)) so no single node
-ever holds the whole filter; broadcast mode is used while the filter fits
-(config BloomConfig.n_bits).
+membership runs map-side from a broadcast.  This is BloomConfig
+mode="broadcast", right while the filter fits an executor; past that the
+scale mode is the per-shard-file cuckoo filter (``cuckoo.py``).
 
 Hashing: pandas' stable siphash (``pandas.util.hash_array``) with two
 fixed hash keys, combined by double hashing — vectorized, deterministic
@@ -169,7 +167,6 @@ def make_might_contain(spark, bl: "ShardedBloom"):
     """Broadcast the filter once and return an Arrow-batched membership
     UDF.  Reconstruction on the worker is zero-copy (frombuffer over the
     broadcast bytes)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import BooleanType
 
     payload = {"meta": (bl.n_bits, bl.n_hashes, bl.n_shards), "bits": bl._bits.tobytes()}
@@ -251,318 +248,4 @@ def reduce_partials(partials_df):
 
     return partials_df.groupBy("shard").applyInPandas(
         _or_group, schema="shard int, bits binary, n_keys long"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Partitioned mode — the 10^10-key scale path (SURVEY.md §2.7 J2;
-# BloomConfig.mode == "partitioned")
-# ---------------------------------------------------------------------------
-
-_HKS = "grabspark-shard0"  # 16-byte hash key for shard routing
-
-
-def shard_of(keys: pd.Series, n_shards: int) -> np.ndarray:
-    """Key -> owning shard (independent hash from the bit-position pair,
-    so shard routing doesn't bias in-shard positions)."""
-    arr = keys.astype(str).to_numpy(dtype=object)
-    return (hash_array(arr, hash_key=_HKS, categorize=False) % np.uint64(n_shards)).astype(
-        np.int64
-    )
-
-
-def _shard_positions(keys: pd.Series, n_hashes: int, shard_bits: int) -> np.ndarray:
-    """(n_hashes, n_keys) bit positions WITHIN a shard's bit space."""
-    h1, h2 = key_hashes(keys)
-    out = np.empty((n_hashes, len(h1)), dtype=np.uint64)
-    sb = np.uint64(shard_bits)
-    for i in range(n_hashes):
-        np.multiply(h2, np.uint64(i), out=out[i])
-        out[i] += h1
-        out[i] %= sb
-    return out
-
-
-class PartitionedBloom:
-    """A Bloom filter split into ``n_shards`` INDEPENDENT per-shard files:
-    each key routes to exactly one shard (``shard_of``), so both build and
-    probe touch one shard per key.  Nothing ever holds (or broadcasts, or
-    ships to the driver) the whole filter:
-
-    * build/update — keys are repartitioned by shard; each task ORs its
-      shards' delta bitmaps into the parent shard files and writes new
-      immutable files executor-side; the driver commits only a manifest
-      of {shard: filename} (Iceberg-style data/metadata split).
-    * probe — candidates are repartitioned by the same shard key
-      (co-partitioned with the filter), and an Arrow UDF loads just the
-      shard files its partition touches, with a per-process LRU cache.
-
-    At 10^10 keys x 9.6 bits (~12 GB), 1024 shards of ~12 MB mean any
-    executor holds only the shards of its partitions; per-round write I/O
-    is the touched shards, distributed across the cluster.  Versioned
-    manifests give the same exact-resume semantics as SnapshotTable
-    (rollback = repoint CURRENT).
-    """
-
-    def __init__(self, dirpath: str, n_bits: int = 1 << 20, n_hashes: int = 7, n_shards: int = 16):
-        assert n_bits % (8 * n_shards) == 0
-        self.dirpath = dirpath
-        self.n_bits = int(n_bits)
-        self.n_hashes = int(n_hashes)
-        self.n_shards = int(n_shards)
-        self.shard_bits = self.n_bits // self.n_shards
-
-    # -- manifest plumbing ---------------------------------------------------
-
-    def _manifest_path(self, v: int) -> str:
-        return os.path.join(self.dirpath, f"manifest-v{v}.json")
-
-    def _current_path(self) -> str:
-        return os.path.join(self.dirpath, "CURRENT")
-
-    def current_version(self) -> int | None:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def manifest(self, version: int | None = None) -> dict | None:
-        import json
-
-        v = self.current_version() if version is None else version
-        if v is None:
-            return None
-        with open(self._manifest_path(v)) as f:
-            return json.load(f)
-
-    def shard_files(self, version: int | None = None) -> dict[int, str]:
-        m = self.manifest(version)
-        if m is None:
-            return {}
-        return {int(s): os.path.join(self.dirpath, "files", f) for s, f in m["shards"].items()}
-
-    def _commit(
-        self, shards: dict[int, str], parent: int | None, n_inserted: int | None = None
-    ) -> int:
-        import json
-        import uuid
-
-        if n_inserted is None:  # inherit the parent's count
-            pm = self.manifest(parent) if parent is not None else None
-            n_inserted = int(pm.get("n_inserted", 0)) if pm else 0
-        v = 0 if parent is None else parent + 1
-        m = {
-            "version": v,
-            "parent": parent,
-            "n_bits": self.n_bits,
-            "n_hashes": self.n_hashes,
-            "n_shards": self.n_shards,
-            "n_inserted": int(n_inserted),
-            "shards": {str(s): f for s, f in sorted(shards.items())},
-        }
-        with open(self._manifest_path(v), "w") as f:
-            json.dump(m, f)
-        tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._current_path())
-        return v
-
-    def create(self) -> int:
-        os.makedirs(os.path.join(self.dirpath, "files"), exist_ok=True)
-        if self.current_version() is None:
-            return self._commit({}, None)
-        return self.current_version()
-
-    def rollback(self, version: int) -> int:
-        """Exact resume: repoint CURRENT at ``version`` (files are
-        immutable, so older manifests stay valid forever)."""
-        m = self.manifest(version)
-        if m is None:
-            raise ValueError(f"no PartitionedBloom manifest v{version} in {self.dirpath}")
-        cur = self.current_version()
-        if cur == version:
-            return cur
-        return self._commit(
-            {int(s): f for s, f in m["shards"].items()}, cur,
-            n_inserted=int(m.get("n_inserted", 0)),
-        )
-
-    @classmethod
-    def load(cls, dirpath: str) -> "PartitionedBloom":
-        import json
-
-        with open(os.path.join(dirpath, "CURRENT")) as f:
-            v = int(f.read().strip())
-        with open(os.path.join(dirpath, f"manifest-v{v}.json")) as f:
-            m = json.load(f)
-        return cls(dirpath, m["n_bits"], m["n_hashes"], m["n_shards"])
-
-    # -- distributed update --------------------------------------------------
-
-    def update(self, keys_df, key_col: str) -> int:
-        """OR the keys into the filter, executor-side.  One shuffle
-        (repartition by shard); each task merges its shards against the
-        parent version's files and writes new immutable shard files; the
-        driver commits the {shard: filename} manifest only."""
-        import uuid
-
-        parent = self.current_version()
-        if parent is None:
-            parent = self.create()
-        parent_files = {s: os.path.basename(p) for s, p in self.shard_files(parent).items()}
-        dirpath, files_dir = self.dirpath, os.path.join(self.dirpath, "files")
-        n_hashes, n_shards, shard_bits = self.n_hashes, self.n_shards, self.shard_bits
-        pf = dict(parent_files)
-
-        shard_udf = F.pandas_udf(
-            lambda s: pd.Series(shard_of(s, n_shards)), "long"
-        )
-
-        def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            deltas: dict[int, np.ndarray] = {}
-            counts: dict[int, int] = {}
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                keys = pdf[key_col]
-                shards = pdf["_shard"].to_numpy()
-                pos = _shard_positions(keys, n_hashes, shard_bits)
-                for s in np.unique(shards):
-                    s = int(s)
-                    mask = shards == s
-                    counts[s] = counts.get(s, 0) + int(mask.sum())
-                    bits = deltas.setdefault(s, np.zeros(shard_bits // 8, dtype=np.uint8))
-                    p = pos[:, mask].ravel()
-                    np.bitwise_or.at(
-                        bits,
-                        (p >> np.uint64(3)).astype(np.int64),
-                        (1 << (p & np.uint64(7))).astype(np.uint8),
-                    )
-            out_shards, out_files, out_counts = [], [], []
-            for s, bits in deltas.items():
-                prev = pf.get(s)
-                if prev is not None:
-                    old = np.load(os.path.join(files_dir, prev))
-                    np.bitwise_or(bits, old, out=bits)
-                fname = f"s{s}-{uuid.uuid4().hex}.npy"
-                np.save(os.path.join(files_dir, fname), bits)
-                out_shards.append(s)
-                out_files.append(fname)
-                out_counts.append(int(counts.get(s, 0)))
-            if out_shards:
-                yield pd.DataFrame(
-                    {"shard": out_shards, "file": out_files, "n_keys": out_counts}
-                )
-
-        touched = (
-            keys_df.select(F.col(key_col))
-            .withColumn("_shard", shard_udf(F.col(key_col)))
-            .repartition(self.n_shards, "_shard")
-            .mapInPandas(gen, schema="shard long, file string, n_keys long")
-            .collect()  # tiny: (shard id, filename) rows only — no bitmap bytes
-        )
-        pm = self.manifest(parent)
-        n_inserted = int(pm.get("n_inserted", 0)) if pm else 0
-        shards = {s: f for s, f in parent_files.items()}
-        for row in touched:
-            shards[int(row["shard"])] = row["file"]
-            n_inserted += int(row["n_keys"])
-        return self._commit(shards, parent, n_inserted=n_inserted)
-
-    # -- map-side probe ------------------------------------------------------
-
-    def make_might_contain(self, spark):
-        """Arrow membership UDF reading per-shard files lazily with a
-        process-level cache.  Pair with a repartition on the shard column
-        (``partitioned_prefilter``) so each worker loads only the shards
-        co-partitioned with its rows."""
-        from pyspark.sql.types import BooleanType
-
-        files = {s: os.path.basename(p) for s, p in self.shard_files().items()}
-        payload = {
-            "files_dir": os.path.join(self.dirpath, "files"),
-            "files": files,
-            "n_hashes": self.n_hashes,
-            "n_shards": self.n_shards,
-            "shard_bits": self.shard_bits,
-        }
-        bc = spark.sparkContext.broadcast(payload)
-
-        @F.pandas_udf(BooleanType())
-        def might(keys: pd.Series) -> pd.Series:
-            p = bc.value
-            cache = _shard_cache()
-            shards = shard_of(keys, p["n_shards"])
-            pos = _shard_positions(keys, p["n_hashes"], p["shard_bits"])
-            hit = np.zeros(len(keys), dtype=bool)
-            for s in np.unique(shards):
-                s = int(s)
-                fname = p["files"].get(str(s), p["files"].get(s))
-                mask = shards == s
-                if fname is None:
-                    continue  # empty shard: definitely not seen
-                path = os.path.join(p["files_dir"], fname)
-                bits = cache.get(path)
-                if bits is None:
-                    bits = np.load(path)
-                    cache[path] = bits
-                sub = np.ones(int(mask.sum()), dtype=bool)
-                pp = pos[:, mask]
-                for i in range(p["n_hashes"]):
-                    q = pp[i]
-                    sub &= (
-                        bits[(q >> np.uint64(3)).astype(np.int64)]
-                        & (1 << (q & np.uint64(7))).astype(np.uint8)
-                    ) != 0
-                hit[mask] = sub
-            return pd.Series(hit)
-
-        might._bc = bc
-        return might
-
-    def fill_ratio(self) -> float:
-        total = 0
-        for path in self.shard_files().values():
-            total += int(np.unpackbits(np.load(path)).sum())
-        return total / self.n_bits
-
-    @property
-    def n_inserted(self) -> int:
-        m = self.manifest()
-        return int(m.get("n_inserted", 0)) if m else 0
-
-    def est_fpp(self) -> float:
-        """Same O(1) saturation estimate as ShardedBloom.est_fpp: keys
-        route uniformly to one shard each, so per-shard load matches the
-        global n/m ratio and the flat-filter formula carries over."""
-        return est_bloom_fpp(self.n_inserted, self.n_bits, self.n_hashes)
-
-
-_SHARD_CACHE: dict = {}
-
-
-def _shard_cache(max_entries: int = 256) -> dict:
-    """Per-Python-worker cache of immutable shard files (worker reuse
-    keeps it warm across batches/rounds)."""
-    if len(_SHARD_CACHE) > max_entries:
-        _SHARD_CACHE.clear()
-    return _SHARD_CACHE
-
-
-def partitioned_prefilter(df, key_expr, pb: PartitionedBloom, spark, out_col: str = "_maybe_seen"):
-    """Tag rows with Bloom membership, co-partitioned with the filter:
-    repartition on the shard of the key (the same routing the build
-    used), so each task probes only its own shards (map-side, no
-    broadcast of the filter)."""
-    n_shards = pb.n_shards
-    shard_udf = F.pandas_udf(lambda s: pd.Series(shard_of(s, n_shards)), "long")
-    might = pb.make_might_contain(spark)
-    return (
-        df.withColumn("_bloom_key", key_expr)
-        .withColumn("_shard", shard_udf(F.col("_bloom_key")))
-        .repartition(n_shards, "_shard")
-        .withColumn(out_col, might(F.col("_bloom_key")))
-        .drop("_bloom_key", "_shard")
     )

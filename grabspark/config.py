@@ -15,27 +15,26 @@ class BloomConfig:
     n_bits: int = 1 << 20
     n_hashes: int = 7
     n_shards: int = 16  # shard the bit-space; per-shard arrays merge cheaply
-    # "broadcast": whole filter broadcast, membership map-side (right while
-    # the filter fits an executor, <~1 GB).  "partitioned": per-shard files
-    # co-partitioned with the key space — build, merge, and probe all run
-    # executor-side on single shards; the scale mode for 10^10 keys where
-    # the filter is ~12 GB and must never sit on one node (bloom.py
-    # PartitionedBloom).  "cuckoo": same sharded/manifested layout but a
-    # cuckoo filter (cuckoo.PartitionedCuckoo) — supports per-key DELETE
-    # for TTL re-crawl (n_bits is reinterpreted as a 16-bit-slot budget).
-    # Every mode is size-gated: the engine neither probes nor updates the
-    # filter while the seen table fits Spark's broadcast threshold
-    # (spark.sql.adaptive.autoBroadcastJoinThreshold, else
-    # spark.sql.autoBroadcastJoinThreshold; -1 = always filter) and builds
-    # it from the seen table the first round it does not.
+    # "broadcast": whole Bloom filter broadcast, membership map-side
+    # (right while the filter fits an executor, <~1 GB).  "cuckoo": the
+    # scale mode — per-shard cuckoo filter files co-partitioned with the
+    # key space (cuckoo.PartitionedCuckoo), built and probed
+    # executor-side on single shards so the filter never sits on one
+    # node, and supporting per-key DELETE for TTL re-crawl (n_bits is
+    # reinterpreted as a 16-bit-slot budget).  Any other value is an
+    # error.  Both modes are size-gated: the engine neither probes nor
+    # updates the filter while the seen table fits Spark's broadcast
+    # threshold (spark.sql.adaptive.autoBroadcastJoinThreshold, else
+    # spark.sql.autoBroadcastJoinThreshold; -1 = always filter) and
+    # builds it from the seen table the first round it does not.
     mode: str = "broadcast"
     # saturation guard: when the filter's estimated false-positive rate
     # (from its insertion count) exceeds this, the engine BYPASSES the
     # prefilter for the round — the exact anti-join is unaffected, but a
     # saturated filter's probe is pure overhead that prunes nothing
     # (measured ~45% of round wall-time at fpp~1.0).  At 0.25 the probe
-    # still prunes >=75% of the certain-new majority.  Bloom modes only,
-    # and only once the size gate has built the filter; cuckoo signals
+    # still prunes >=75% of the certain-new majority.  Broadcast mode
+    # only, and only once the size gate has built the filter; cuckoo signals
     # fullness by failing inserts instead of degrading.
     max_fpp: float = 0.25
 

@@ -1,19 +1,20 @@
-"""J2-alt — partitioned cuckoo URL-seen filter (north-rule extension).
+"""J2 scale mode — partitioned cuckoo URL-seen filter (north-rule extension).
 
-The north rule names a "partitioned Bloom/cuckoo URL-seen filter";
-``bloom.PartitionedBloom`` covers the Bloom half.  The cuckoo filter
-(Fan, Andersen, Kaminsky, Mitzenmacher, "Cuckoo Filter: Practically
-Better Than Bloom", CoNEXT 2014 — public paper) buys the one capability
-Bloom fundamentally lacks: **deletion**.  A crawl that re-crawls on TTL
-must remove expired URLs from the seen side; with Bloom that means
-rebuilding the filter, with cuckoo it is a per-key delete that mirrors
-the snapshot table's ``delete_where``.
+The north rule names a "partitioned Bloom/cuckoo URL-seen filter".  The
+broadcast Bloom (``bloom.ShardedBloom``) covers the filter that fits an
+executor; past that, this cuckoo filter (Fan, Andersen, Kaminsky,
+Mitzenmacher, "Cuckoo Filter: Practically Better Than Bloom", CoNEXT
+2014 — public paper) is the one partitioned mode.  It buys the one
+capability Bloom fundamentally lacks: **deletion**.  A crawl that
+re-crawls on TTL must remove expired URLs from the seen side; with Bloom
+that means rebuilding the filter, with cuckoo it is a per-key delete
+that mirrors the snapshot table's ``delete_where``.
 
-Shape (standard cuckoo, sharded like PartitionedBloom):
+Shape (standard cuckoo, sharded):
 
-* each key routes to exactly one shard (``bloom.shard_of`` — the same
-  routing as the Bloom shards, so the two filters are drop-in
-  replacements for each other in ``partitioned_prefilter``);
+* each key routes to exactly one shard (``shard_of``, a hash independent
+  of the fingerprint/bucket pair), so build and probe touch one shard
+  per key and nothing ever holds, broadcasts or ships the whole filter;
 * a shard is a ``(n_buckets, bucket_size)`` uint16 table of 16-bit
   fingerprints (0 = empty). fp and both candidate buckets derive from
   the key's stable siphashes; ``i2 = i1 XOR h(fp)`` (partial-key
@@ -28,7 +29,9 @@ Shape (standard cuckoo, sharded like PartitionedBloom):
   fingerprint and bucket pair occupy two slots, so deleting one leaves
   the other's membership intact (multiset semantics);
 * contains: fingerprint present in bucket i1 or i2 — fully vectorized
-  numpy (no per-key loop on the probe path).
+  numpy (no per-key loop on the probe path); ``partitioned_prefilter``
+  repartitions the probed rows on the same shard routing, so each task
+  loads only its own shard files.
 
 Membership is insertion-order independent (eviction only ever moves a
 fingerprint between its two legal buckets), so query results are
@@ -36,9 +39,9 @@ deterministic even though shard file bytes may differ run-to-run.
 False-positive rate ~ 2*bucket_size / 2^16 (~0.012% at bucket_size 4);
 false negatives are impossible for inserted-and-not-deleted keys.
 
-Versioned {shard: filename} manifests (identical plumbing to
-PartitionedBloom) give immutable files + atomic CURRENT + rollback for
-exact resume.  The driver only ever sees shard ids and filenames.
+Versioned {shard: filename} manifests give immutable files + atomic
+CURRENT + rollback for exact resume (Iceberg-style data/metadata split).
+The driver only ever sees shard ids and filenames.
 """
 
 from __future__ import annotations
@@ -50,13 +53,28 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pandas.util import hash_array
 from pyspark.sql import functions as F
 
-from .bloom import _shard_cache, key_hashes, shard_of
+from .bloom import key_hashes
 
 BUCKET_SIZE = 4
 MAX_KICKS = 500
 _FP_MULT = np.uint64(0x5BD1E995)  # small odd multiplier for the fp hash
+_HKS = "grabspark-shard0"  # 16-byte hash key for shard routing
+
+
+def shard_of(keys: pd.Series, n_shards: int) -> np.ndarray:
+    """Key -> owning shard (independent hash from the fingerprint/bucket
+    pair, so shard routing doesn't bias in-shard positions)."""
+    arr = keys.astype(str).to_numpy(dtype=object)
+    return (hash_array(arr, hash_key=_HKS, categorize=False) % np.uint64(n_shards)).astype(
+        np.int64
+    )
+
+
+def _shard_udf(n_shards: int):
+    return F.pandas_udf(lambda s: pd.Series(shard_of(s, n_shards)), "long")
 
 
 def _fp_and_buckets(keys: pd.Series, n_buckets: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -142,9 +160,9 @@ def _contains_in(table: np.ndarray, fp: np.ndarray, i1: np.ndarray, i2: np.ndarr
 
 class PartitionedCuckoo:
     """A cuckoo filter split into ``n_shards`` independent per-shard
-    fingerprint tables with PartitionedBloom's data/metadata split:
-    executor tasks write immutable shard .npy files, the driver commits
-    only {shard: filename} manifests.  Capacity per shard is
+    fingerprint tables with a data/metadata split: executor tasks write
+    immutable shard .npy files, the driver commits only {shard: filename}
+    manifests.  Capacity per shard is
     ``n_buckets * BUCKET_SIZE`` slots; keep load under ~0.95."""
 
     def __init__(self, dirpath: str, n_buckets: int = 1 << 12, n_shards: int = 16):
@@ -153,7 +171,7 @@ class PartitionedCuckoo:
         self.n_buckets = int(n_buckets)
         self.n_shards = int(n_shards)
 
-    # -- manifest plumbing (same protocol as PartitionedBloom) --------------
+    # -- manifest plumbing ---------------------------------------------------
 
     def _manifest_path(self, v: int) -> str:
         return os.path.join(self.dirpath, f"manifest-v{v}.json")
@@ -236,8 +254,6 @@ class PartitionedCuckoo:
         n_buckets, n_shards = self.n_buckets, self.n_shards
         pf = dict(parent_files)
 
-        shard_udf = F.pandas_udf(lambda s: pd.Series(shard_of(s, n_shards)), "long")
-
         def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             tables: dict[int, np.ndarray] = {}
             bad = 0
@@ -276,8 +292,8 @@ class PartitionedCuckoo:
 
         touched = (
             keys_df.select(F.col(key_col))
-            .withColumn("_shard", shard_udf(F.col(key_col)))
-            .repartition(self.n_shards, "_shard")
+            .withColumn("_shard", _shard_udf(n_shards)(F.col(key_col)))
+            .repartition(n_shards, "_shard")
             .mapInPandas(gen, schema="shard long, file string")
             .collect()  # tiny: (shard id, filename) rows only — no table bytes
         )
@@ -303,8 +319,10 @@ class PartitionedCuckoo:
 
     def make_contains(self, spark):
         """Arrow membership UDF reading per-shard files lazily with the
-        process-level cache; pair with a shard repartition (the same
-        ``partitioned_prefilter`` shape as the Bloom probe)."""
+        process-level cache; pair with a shard repartition
+        (``partitioned_prefilter``) so each worker loads only the shards
+        co-partitioned with its rows.  ``._bc`` is the payload broadcast,
+        exposed so long-lived callers can destroy stale rounds."""
         from pyspark.sql.types import BooleanType
 
         files = {s: os.path.basename(p) for s, p in self.shard_files().items()}
@@ -340,11 +358,6 @@ class PartitionedCuckoo:
         contains._bc = bc
         return contains
 
-    # drop-in for PartitionedBloom in bloom.partitioned_prefilter and the
-    # engine's prefilter slot (identical create/rollback/update/probe
-    # surface — the filters interchange behind BloomConfig.mode)
-    make_might_contain = make_contains
-
     @classmethod
     def sized_for_bits(cls, dirpath: str, n_bits: int, n_shards: int) -> "PartitionedCuckoo":
         """Size from a BloomConfig-style bit budget: 16-bit slots, so
@@ -363,3 +376,29 @@ class PartitionedCuckoo:
             used += int((t != 0).sum())
             total += t.size
         return used / total if total else 0.0
+
+
+_SHARD_CACHE: dict = {}
+
+
+def _shard_cache(max_entries: int = 256) -> dict:
+    """Per-Python-worker cache of immutable shard files (worker reuse
+    keeps it warm across batches/rounds)."""
+    if len(_SHARD_CACHE) > max_entries:
+        _SHARD_CACHE.clear()
+    return _SHARD_CACHE
+
+
+def partitioned_prefilter(df, key_expr, contains, n_shards: int, out_col: str = "_maybe_seen"):
+    """Tag rows with filter membership (``contains`` from
+    ``PartitionedCuckoo.make_contains``), co-partitioned with the filter:
+    repartition on the shard of the key (the same routing the build
+    used), so each task probes only its own shards (map-side, no
+    broadcast of the filter)."""
+    return (
+        df.withColumn("_bloom_key", key_expr)
+        .withColumn("_shard", _shard_udf(n_shards)(F.col("_bloom_key")))
+        .repartition(n_shards, "_shard")
+        .withColumn(out_col, contains(F.col("_bloom_key")))
+        .drop("_bloom_key", "_shard")
+    )

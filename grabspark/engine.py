@@ -95,6 +95,10 @@ class CrawlEngine:
     def __init__(self, spark: SparkSession, cfg: EngineConfig):
         from .session import attach_package
 
+        if cfg.bloom.mode not in ("broadcast", "cuckoo"):
+            raise ValueError(
+                f"BloomConfig.mode must be 'broadcast' or 'cuckoo', got {cfg.bloom.mode!r}"
+            )
         attach_package(spark)
         self.spark = spark
         self.cfg = cfg
@@ -118,34 +122,21 @@ class CrawlEngine:
         self.rules = (
             spark.read.parquet(cfg.robots_path) if cfg.robots_path else None
         )
+        # the seen filter: broadcast Bloom (self.bloom) or, in mode
+        # "cuckoo", the per-shard-file cuckoo filter (self.pbloom)
         self.bloom: ShardedBloom | None = None
-        # partitioned seen filter (mode "partitioned" -> PartitionedBloom,
-        # mode "cuckoo" -> PartitionedCuckoo): identical create/rollback/
-        # update/probe surface, so every engine path below is shared
         self.pbloom = None
-        if cfg.bloom.enabled:
-            if cfg.bloom.mode == "partitioned":
-                from .bloom import PartitionedBloom
+        if cfg.bloom.enabled and cfg.bloom.mode == "cuckoo":
+            from .cuckoo import PartitionedCuckoo
 
-                self.pbloom = PartitionedBloom(
-                    os.path.join(rd, "bloomp"),
-                    cfg.bloom.n_bits,
-                    cfg.bloom.n_hashes,
-                    cfg.bloom.n_shards,
-                )
-            elif cfg.bloom.mode == "cuckoo":
-                from .cuckoo import PartitionedCuckoo
-
-                # deletable seen filter: per-round inserts are globally
-                # unique keys (post-anti-join), the cuckoo precondition
-                self.pbloom = PartitionedCuckoo.sized_for_bits(
-                    os.path.join(rd, "cuckoo"), cfg.bloom.n_bits, cfg.bloom.n_shards
-                )
-            else:
-                self.bloom = ShardedBloom(
-                    cfg.bloom.n_bits, cfg.bloom.n_hashes, cfg.bloom.n_shards
-                )
-        self._bloom_bc = None  # previous round's broadcast (destroyed on reuse)
+            # deletable seen filter: per-round inserts are globally
+            # unique keys (post-anti-join), the cuckoo precondition
+            self.pbloom = PartitionedCuckoo.sized_for_bits(
+                os.path.join(rd, "cuckoo"), cfg.bloom.n_bits, cfg.bloom.n_shards
+            )
+        elif cfg.bloom.enabled:
+            self.bloom = self._empty_bloom()
+        self._bloom_bc = None  # previous round's probe broadcast (destroyed on reuse)
         # rounds where the saturation guard skipped the J2 probe (also
         # surfaced as the bloom_prefilter_bypassed metrics counter)
         self.prefilter_bypassed_rounds: list[int] = []
@@ -170,10 +161,14 @@ class CrawlEngine:
         self.seen.overwrite(self.spark.createDataFrame([], SEEN_SCHEMA))
         self.trace.overwrite(self.spark.createDataFrame([], self.trace.schema()))
         self.metrics.overwrite(self.spark.createDataFrame([], METRICS_SCHEMA))
+        # v0 is an empty filter in both modes, whatever this engine or
+        # run dir crawled before (resume rolls back to the same v0)
         if self.bloom is not None:
+            self.bloom = self._empty_bloom()
             self.bloom.save(self._bloom_dir(0))
         if self.pbloom is not None:
             self.pbloom.create()
+            self.pbloom.rollback(0)
         self.frontier.overwrite(
             seeds_df,
             meta={
@@ -233,13 +228,10 @@ class CrawlEngine:
         Filter maintenance: cuckoo mode (BloomConfig mode="cuckoo")
         deletes per-key — the capability that mode exists for; broadcast
         Bloom rebuilds from the remaining rows (the rebuild cost is why
-        cuckoo is the TTL mode); partitioned Bloom can neither delete
-        nor cheaply rebuild in place -> ValueError directing to cuckoo.
-        A filter the size gate has not built yet needs no maintenance:
-        only the seen rows are deleted.
+        cuckoo is the TTL mode).  A filter the size gate has not built
+        yet needs no maintenance: only the seen rows are deleted.
         """
         from . import udfs
-        from .cuckoo import PartitionedCuckoo
 
         meta = dict(self.frontier.meta() or {})
         if not meta:
@@ -252,12 +244,6 @@ class CrawlEngine:
         if n_exp == 0:
             expired.unpersist()
             return self.run()
-        if self.pbloom is not None and not isinstance(self.pbloom, PartitionedCuckoo):
-            expired.unpersist()
-            raise ValueError(
-                "partitioned Bloom cannot delete keys; use "
-                "BloomConfig(mode='cuckoo') for TTL re-crawl"
-            )
         seen_v = self.seen.delete_where(cond)
         bloom_v = int(meta["bloom_v"])
         if bloom_v > 0 and self.pbloom is not None:
@@ -265,7 +251,7 @@ class CrawlEngine:
                 expired.withColumn("_bk", self._bloom_key()), "_bk"
             )
         elif bloom_v > 0 and self.bloom is not None:
-            self.bloom = ShardedBloom(self.bloom.n_bits, self.bloom.n_hashes, self.bloom.n_shards)
+            self.bloom = self._empty_bloom()
             bloom_v = self._bloom_broadcast_update(self.seen.read(seen_v), bloom_v)
         rnd = int(meta["round"])
         rows = (
@@ -321,29 +307,32 @@ class CrawlEngine:
     def _bloom_dir(self, v: int) -> str:
         return os.path.join(self.cfg.run_dir, "bloom", f"v{v}")
 
+    def _empty_bloom(self) -> ShardedBloom:
+        b = self.cfg.bloom
+        return ShardedBloom(b.n_bits, b.n_hashes, b.n_shards)
+
     @staticmethod
     def _bloom_key():
         return F.concat_ws("\x1f", F.col("seed_idx").cast("string"), F.col("url_canon"))
 
     def _bloom_might_contain(self, df: DataFrame) -> DataFrame:
-        """Adds ``_maybe_seen``: broadcast membership UDF, or the
-        shard-co-partitioned probe in partitioned mode.  The previous
-        round's broadcast is destroyed before a new one is created
-        (no broadcast accretion over a long crawl)."""
+        """Adds ``_maybe_seen``: the broadcast membership UDF, or in
+        cuckoo mode the shard-co-partitioned probe.  Either probe ships a
+        broadcast; the previous round's is destroyed before a new one is
+        created (no broadcast accretion over a long crawl)."""
         if self._bloom_bc is not None:
             self._bloom_bc.destroy()
             self._bloom_bc = None
         if self.pbloom is not None:
-            from .bloom import partitioned_prefilter
+            from .cuckoo import partitioned_prefilter
 
-            out = partitioned_prefilter(
-                df, self._bloom_key(), self.pbloom, self.spark, out_col="_maybe_seen"
-            )
-            return out
+            contains = self.pbloom.make_contains(self.spark)
+            self._bloom_bc = contains._bc
+            return partitioned_prefilter(df, self._bloom_key(), contains, self.pbloom.n_shards)
         from .bloom import make_might_contain
 
         might = make_might_contain(self.spark, self.bloom)
-        self._bloom_bc = might._bc if hasattr(might, "_bc") else None
+        self._bloom_bc = might._bc
         return df.withColumn("_maybe_seen", might(self._bloom_key()))
 
     def _round(self, rnd: int, meta: dict) -> None:
@@ -368,10 +357,10 @@ class CrawlEngine:
         # the round skips both.  The first round past the threshold
         # builds the filter once from that snapshot; from then on it is
         # built (bloom_v > 0) and stays on.
-        flt = self.bloom if self.bloom is not None else self.pbloom
+        has_filter = self.bloom is not None or self.pbloom is not None
         bloom_v = int(meta["bloom_v"])
-        filter_on = flt is not None and not self._seen_filter_gated(meta)
-        if flt is not None and not filter_on:
+        filter_on = has_filter and not self._seen_filter_gated(meta)
+        if has_filter and not filter_on:
             counters["seen_filter_gated"] = 1.0
         if filter_on and bloom_v == 0:
             # an empty snapshot needs no build: the v0 filter is exact for it
@@ -386,15 +375,14 @@ class CrawlEngine:
         # the round BYPASSES it instead of paying hash work for nothing.
         # Bypass never affects results (the prefilter is advisory; the
         # anti-join below is exact either way).  est_fpp is O(1) from the
-        # filter's maintained insertion count.
+        # Bloom's maintained insertion count; cuckoo signals fullness by
+        # failing inserts instead of degrading.
         use_prefilter = filter_on and rnd > 0
-        if use_prefilter:
-            est = getattr(flt, "est_fpp", None)
-            if est is not None and est() > cfg.bloom.max_fpp:
-                use_prefilter = False
-                self.prefilter_bypassed_rounds.append(rnd)
+        if use_prefilter and self.bloom is not None and self.bloom.est_fpp() > cfg.bloom.max_fpp:
+            use_prefilter = False
+            self.prefilter_bypassed_rounds.append(rnd)
         if use_prefilter and self.pbloom is not None:
-            # partitioned mode keeps the split+persist form: the probe
+            # cuckoo mode keeps the split+persist form: the probe
             # repartitions on the key's SHARD (co-partitioned with the
             # filter files), so bloom-negative rows must be separated
             # BEFORE the anti-join or the whole batch would pay a second

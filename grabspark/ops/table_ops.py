@@ -9,11 +9,13 @@ The reference's remaining relational surface (SURVEY.md §2.5/§2.6):
   token_expires_at < NOW()`` event (/root/reference/database/
   migration.sql:14-17) — ``DELETE ... WHERE`` as a copy-on-write commit.
 * ``bloom_partitioned_antijoin`` — the J2 scale mode (BloomConfig
-  mode="partitioned"): per-shard filter files built and probed
-  executor-side, co-partitioned with the key; result must equal the
-  exact anti-join (advisory-filter invariant).
+  mode="cuckoo"): per-shard filter files built and probed executor-side,
+  co-partitioned with the key; result must equal the exact anti-join
+  (advisory-filter invariant).
+* ``cuckoo_ttl_antijoin`` — the same probe after TTL deletes from the
+  filter, which only the cuckoo filter can express.
 
-Each query exercises the REAL SnapshotTable/PartitionedBloom code paths
+Each query exercises the REAL SnapshotTable/PartitionedCuckoo code paths
 in a temp dir, then returns the resulting DataFrame for the value gate.
 """
 
@@ -103,26 +105,46 @@ WHERE NOT (ts < TIMESTAMP '2024-01-04 00:00:00')
 """
 
 
-def bloom_partitioned_antijoin(spark: SparkSession, sf: str) -> DataFrame:
-    """Same result contract as relational.bloom_prefilter_antijoin, but
-    through the PARTITIONED filter: distributed shard build (executor-side
-    merge, driver commits metadata only) + shard-co-partitioned probe."""
-    from ..bloom import PartitionedBloom, partitioned_prefilter
+def _cuckoo_of(keys: DataFrame, key_col: str):
+    """A partitioned cuckoo filter holding the (distinct) ``keys``, sized
+    from their count at ~0.6 load (a fixed size hit 0.92 load at sf0.1 —
+    the cuckoo viability edge — and failed intermittently); the count is
+    one cheap action on the distinct keys."""
+    from ..cuckoo import PartitionedCuckoo
 
-    c = T(spark, sf, "customer")
-    o = T(spark, sf, "orders")
-    pb = PartitionedBloom(
-        tempfile.mkdtemp(prefix="grabspark-pbloom-"), n_bits=1 << 17, n_hashes=7, n_shards=8
+    n_keys = keys.count()
+    n_shards = 8
+    n_buckets = 1 << max(9, (n_keys // (n_shards * 4 * 6 // 10)).bit_length())
+    pc = PartitionedCuckoo(
+        tempfile.mkdtemp(prefix="grabspark-pcuckoo-"), n_buckets=n_buckets, n_shards=n_shards
     )
-    pb.create()
-    pb.update(o.select(F.col("o_custkey").cast("string").alias("_bk")), "_bk")
+    pc.create()
+    pc.update(keys, key_col)
+    return pc
+
+
+def _prefiltered_antijoin(spark: SparkSession, c: DataFrame, pc, seen: DataFrame):
+    """Customers whose key is not an ``o_custkey`` of ``seen``: the filter's definitely-new rows skip
+    the exact anti-join, its maybe-seen rows go through it."""
+    from ..cuckoo import partitioned_prefilter
+
     tagged = partitioned_prefilter(
-        c, F.col("c_custkey").cast("string"), pb, spark, out_col="_maybe"
+        c, F.col("c_custkey").cast("string"), pc.make_contains(spark), pc.n_shards, out_col="_maybe"
     )
     sure_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
     maybe = tagged.filter(F.col("_maybe")).drop("_maybe")
-    out = sure_new.unionByName(maybe.join(o, maybe.c_custkey == o.o_custkey, "left_anti"))
+    out = sure_new.unionByName(maybe.join(seen, maybe.c_custkey == seen.o_custkey, "left_anti"))
     return out.select("c_custkey", "c_name", "c_mktsegment")
+
+
+def bloom_partitioned_antijoin(spark: SparkSession, sf: str) -> DataFrame:
+    """Same result contract as relational.bloom_prefilter_antijoin, but
+    through the PARTITIONED filter: distributed shard build (executor-side
+    insert, driver commits metadata only) + shard-co-partitioned probe."""
+    c = T(spark, sf, "customer")
+    o = T(spark, sf, "orders")
+    seen_keys = o.select(F.col("o_custkey").cast("string").alias("_k")).distinct()
+    return _prefiltered_antijoin(spark, c, _cuckoo_of(seen_keys, "_k"), o)
 
 
 _ANTI_SQL = """
@@ -138,7 +160,7 @@ _CUCKOO_CUTOFF = "2001-01-01 00:00:00"
 
 
 def cuckoo_ttl_antijoin(spark: SparkSession, sf: str) -> DataFrame:
-    """J2-alt (north rule "bloom/cuckoo"): the TTL re-crawl flow Bloom
+    """J2 cuckoo mode (north rule "bloom/cuckoo"): the TTL re-crawl flow Bloom
     cannot express.  Seen = customers with orders; customers whose last
     order predates the TTL cutoff are DELETED from the cuckoo filter
     (mirroring a seen-table delete_where), so they come back as
@@ -146,13 +168,6 @@ def cuckoo_ttl_antijoin(spark: SparkSession, sf: str) -> DataFrame:
     result must equal the exact anti-join against the live seen set —
     "contains" rows still flow through it, deletion can only send rows
     down the definitely-new fast path."""
-    import tempfile as _tf
-
-    from ..bloom import shard_of
-    from ..cuckoo import PartitionedCuckoo
-
-    import pandas as pd
-
     c = T(spark, sf, "customer")
     o = T(spark, sf, "orders")
     seen_keys = o.select(F.col("o_custkey").cast("string").alias("_k")).distinct()
@@ -164,35 +179,9 @@ def cuckoo_ttl_antijoin(spark: SparkSession, sf: str) -> DataFrame:
         F.col("_last") >= F.lit(_CUCKOO_CUTOFF).cast("timestamp")
     ).select("o_custkey")
 
-    # size from the actual key count at ~0.6 target load (a fixed size
-    # hit 0.92 load at sf0.1 — the cuckoo viability edge — and failed
-    # intermittently); the count is one cheap action on the distinct
-    n_keys = seen_keys.count()
-    n_shards = 8
-    n_buckets = 1 << max(9, (n_keys // (n_shards * 4 * 6 // 10)).bit_length())
-    pc = PartitionedCuckoo(
-        _tf.mkdtemp(prefix="grabspark-pcuckoo-"), n_buckets=n_buckets, n_shards=n_shards
-    )
-    pc.create()
-    pc.update(seen_keys, "_k")
+    pc = _cuckoo_of(seen_keys, "_k")
     pc.delete(expired_keys, "_k")
-
-    n_shards = pc.n_shards
-    shard_udf = F.pandas_udf(lambda sr: pd.Series(shard_of(sr, n_shards)), "long")
-    contains = pc.make_contains(spark)
-    tagged = (
-        c.withColumn("_ck", F.col("c_custkey").cast("string"))
-        .withColumn("_shard", shard_udf(F.col("_ck")))
-        .repartition(n_shards, "_shard")  # probe co-partitioned with the shards
-        .withColumn("_maybe", contains(F.col("_ck")))
-        .drop("_ck", "_shard")
-    )
-    sure_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
-    maybe = tagged.filter(F.col("_maybe")).drop("_maybe")
-    out = sure_new.unionByName(
-        maybe.join(live, maybe.c_custkey == live.o_custkey, "left_anti")
-    )
-    return out.select("c_custkey", "c_name", "c_mktsegment")
+    return _prefiltered_antijoin(spark, c, pc, live)
 
 
 _CUCKOO_SQL = f"""

@@ -56,6 +56,17 @@ def attach_package(spark: SparkSession) -> None:
     setattr(sc, _ATTACHED_ATTR, True)
 
 
+def driver_memory() -> str:
+    """Driver heap for the bench scripts: ``SPARK_GRAFT_DRIVER_MEM`` if
+    set, else half of this machine's physical memory (a fixed default
+    larger than the machine swaps or gets the driver killed)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(phys // 2 >> 20, 1024)}m"
+
+
 def default_session(app: str = "grabspark", cores: str | int = "*", shuffle_partitions: int | None = None) -> SparkSession:
     """An opinionated local session: AQE on, Arrow on, UTC."""
     n = str(cores)

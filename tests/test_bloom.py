@@ -89,56 +89,58 @@ def _timed_contains(bl, probe):
     return time.time() - t0
 
 
-# -- partitioned mode (J2 scale path) ----------------------------------------
+# -- partitioned mode (J2 scale path: the cuckoo filter) --------------------
+
+
+def _probe(spark, pc, df):
+    from pyspark.sql import functions as F
+
+    from grabspark.cuckoo import partitioned_prefilter
+
+    out = partitioned_prefilter(df, F.col("k"), pc.make_contains(spark), pc.n_shards, out_col="m")
+    return {r.k: r.m for r in out.collect()}
 
 
 def test_partitioned_no_false_negatives_and_probe(spark, tmp_path):
     """Every inserted key must probe true through the shard-co-partitioned
     path; un-inserted keys mostly probe false (advisory prefilter)."""
-    from pyspark.sql import functions as F
+    from grabspark.cuckoo import PartitionedCuckoo
 
-    from grabspark.bloom import PartitionedBloom, partitioned_prefilter
-
-    pb = PartitionedBloom(str(tmp_path / "pb"), n_bits=1 << 14, n_hashes=5, n_shards=8)
-    pb.create()
+    pc = PartitionedCuckoo(str(tmp_path / "pc"), n_buckets=1 << 8, n_shards=8)
+    pc.create()
     ins = spark.createDataFrame([(f"k{i}",) for i in range(1500)], ["k"]).repartition(6)
-    v1 = pb.update(ins, "k")
-    assert v1 == 1 and len(pb.shard_files()) > 0
+    v1 = pc.update(ins, "k")
+    assert v1 == 1 and len(pc.shard_files()) > 0
 
     probe = spark.createDataFrame(
         [(f"k{i}",) for i in range(1500)] + [(f"x{i}",) for i in range(1500)], ["k"]
     )
-    out = partitioned_prefilter(probe, F.col("k"), pb, spark, out_col="maybe")
-    rows = {r.k: r.maybe for r in out.collect()}
+    rows = _probe(spark, pc, probe)
     assert all(rows[f"k{i}"] for i in range(1500)), "false negative!"
     fp = sum(1 for i in range(1500) if rows[f"x{i}"]) / 1500
     assert fp < 0.2
 
 
 def test_partitioned_incremental_update_and_rollback(spark, tmp_path):
-    from pyspark.sql import functions as F
+    from grabspark.cuckoo import PartitionedCuckoo
 
-    from grabspark.bloom import PartitionedBloom, partitioned_prefilter
-
-    pb = PartitionedBloom(str(tmp_path / "pb2"), n_bits=1 << 14, n_hashes=5, n_shards=8)
-    pb.create()
+    pc = PartitionedCuckoo(str(tmp_path / "pc2"), n_buckets=1 << 8, n_shards=8)
+    pc.create()
     a = spark.createDataFrame([(f"a{i}",) for i in range(300)], ["k"])
     b = spark.createDataFrame([(f"b{i}",) for i in range(300)], ["k"])
-    v1 = pb.update(a, "k")
-    v2 = pb.update(b, "k")
+    v1 = pc.update(a, "k")
+    v2 = pc.update(b, "k")
     assert (v1, v2) == (1, 2)
 
     probe = spark.createDataFrame([("a0",), ("b0",)], ["k"])
-    out = {r.k: r.m for r in partitioned_prefilter(probe, F.col("k"), pb, spark, "m").collect()}
-    assert out == {"a0": True, "b0": True}
+    assert _probe(spark, pc, probe) == {"a0": True, "b0": True}
 
     # rollback to v1: b-keys may flip back to definitely-not-seen
-    pb.rollback(v1)
-    out1 = {r.k: r.m for r in partitioned_prefilter(probe, F.col("k"), pb, spark, "m").collect()}
-    assert out1["a0"] is True
+    pc.rollback(v1)
+    assert _probe(spark, pc, probe)["a0"] is True
 
-    pb2 = PartitionedBloom.load(str(tmp_path / "pb2"))
-    assert (pb2.n_bits, pb2.n_hashes, pb2.n_shards) == (1 << 14, 5, 8)
+    pc2 = PartitionedCuckoo.load(str(tmp_path / "pc2"))
+    assert (pc2.n_buckets, pc2.n_shards) == (1 << 8, 8)
 
 
 from hypothesis import given, settings
@@ -152,31 +154,22 @@ from hypothesis import strategies as st
 )
 def test_partitioned_shard_math_no_false_negatives(keys, n_shards):
     """Property: keys routed to their shard and inserted into that
-    shard's local bitmap ALWAYS probe true through the same math the
+    shard's local table ALWAYS probe true through the same math the
     executor-side build/probe kernels use (pure numpy, no Spark)."""
-    from grabspark.bloom import _shard_positions, shard_of
+    from grabspark.cuckoo import BUCKET_SIZE, _contains_in, _fp_and_buckets, _insert_into, shard_of
 
-    shard_bits = 1 << 12
+    n_buckets = 1 << 6
     ser = pd.Series(keys)
     shards = shard_of(ser, n_shards)
-    pos = _shard_positions(ser, 5, shard_bits)
-    bitmaps = {s: np.zeros(shard_bits // 8, dtype=np.uint8) for s in range(n_shards)}
+    fp, i1, i2 = _fp_and_buckets(ser, n_buckets)
+    tables = {s: np.zeros((n_buckets, BUCKET_SIZE), dtype=np.uint16) for s in range(n_shards)}
     for s in np.unique(shards):
-        mask = shards == s
-        p = pos[:, mask].ravel()
-        np.bitwise_or.at(
-            bitmaps[int(s)],
-            (p >> np.uint64(3)).astype(np.int64),
-            (1 << (p & np.uint64(7))).astype(np.uint8),
-        )
+        m = shards == s
+        assert _insert_into(tables[int(s)], fp[m], i1[m], i2[m]) == 0
     # probe: every inserted key hits in its own shard
     for i, k in enumerate(keys):
-        s = int(shards[i])
-        pk = pos[:, i]
-        hit = all(
-            bitmaps[s][int(q) >> 3] & (1 << (int(q) & 7)) for q in pk
-        )
-        assert hit, k
+        t = tables[int(shards[i])]
+        assert _contains_in(t, fp[i : i + 1], i1[i : i + 1], i2[i : i + 1])[0], k
     # shard routing is deterministic across calls
     assert np.array_equal(shard_of(ser, n_shards), shards)
 
@@ -238,22 +231,6 @@ def test_bloom_bits_for_sizing():
     from grabspark.bloom import est_bloom_fpp
 
     assert est_bloom_fpp(64_000_000, bloom_bits_for(64_000_000), 7) < 0.02
-
-
-def test_partitioned_insert_count_and_rollback(spark, tmp_path):
-    from grabspark.bloom import PartitionedBloom
-
-    pb = PartitionedBloom(str(tmp_path / "pb"), n_bits=1 << 14, n_hashes=5, n_shards=8)
-    pb.create()
-    df1 = spark.createDataFrame([(f"k{i}",) for i in range(100)], ["k"])
-    v1 = pb.update(df1, "k")
-    assert pb.n_inserted == 100
-    df2 = spark.createDataFrame([(f"m{i}",) for i in range(50)], ["k"])
-    pb.update(df2, "k")
-    assert pb.n_inserted == 150
-    assert pb.est_fpp() > 0.0
-    pb.rollback(v1)
-    assert pb.n_inserted == 100
 
 
 def test_reduce_partials_matches_direct_merge(spark):

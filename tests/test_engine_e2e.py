@@ -178,34 +178,10 @@ def test_bloom_saturation_bypass_same_result(spark, crawl_setup, filter_forced_o
     assert int(n_bypassed or 0) == len(eng.prefilter_bypassed_rounds)
 
 
-def test_bloom_partitioned_same_result(spark, crawl_setup, filter_forced_on):
-    """J2 partitioned mode (BloomConfig mode='partitioned'): per-shard
-    files built/probed executor-side must leave the [REF-EXACT] trace
-    untouched (advisory-filter invariant, now for the scale mode)."""
-    spec, store, store_path, seeds, golden, base = crawl_setup
-    eng = run_engine(
-        spark,
-        store_path,
-        seeds,
-        base / "run_pbloom",
-        bloom=BloomConfig(enabled=True, mode="partitioned", n_bits=1 << 16, n_shards=8),
-    )
-    got = engine_trace_rows(eng)
-    assert got == [tuple(t) for t in golden.trace]
-    # the filter actually exists on disk as per-shard files
-    assert eng.pbloom is not None and len(eng.pbloom.shard_files()) > 0
-    # it cannot delete keys: a TTL re-crawl is refused before any seen
-    # row is deleted
-    seen_v = eng.seen.current_version()
-    with pytest.raises(ValueError, match="cannot delete keys"):
-        eng.expire_and_recrawl(F.col("seed_idx") == 0)
-    assert eng.seen.current_version() == seen_v
-
-
 def test_bloom_cuckoo_same_result(spark, crawl_setup, filter_forced_on):
-    """J2-alt cuckoo mode (BloomConfig mode='cuckoo'): the deletable
-    filter must leave the [REF-EXACT] trace untouched (advisory-filter
-    invariant), with shard files on disk like the partitioned Bloom."""
+    """J2 cuckoo mode (BloomConfig mode='cuckoo'), the scale mode:
+    per-shard files built/probed executor-side must leave the
+    [REF-EXACT] trace untouched (advisory-filter invariant)."""
     spec, store, store_path, seeds, golden, base = crawl_setup
     eng = run_engine(
         spark,
@@ -587,7 +563,6 @@ def test_engine_robots_wildcard_e2e(spark, crawl_setup, tmp_path):
 
 _FILTER_MODES = {
     "broadcast": BloomConfig(enabled=True),
-    "partitioned": BloomConfig(enabled=True, mode="partitioned", n_bits=1 << 16, n_shards=8),
     "cuckoo": BloomConfig(enabled=True, mode="cuckoo", n_bits=1 << 16, n_shards=8),
 }
 
@@ -617,7 +592,7 @@ def filter_key_count(eng) -> int:
 
     if isinstance(eng.pbloom, PartitionedCuckoo):
         return sum(int((np.load(p) != 0).sum()) for p in eng.pbloom.shard_files().values())
-    return (eng.bloom or eng.pbloom).n_inserted
+    return eng.bloom.n_inserted
 
 
 def full_state(eng):
@@ -718,6 +693,65 @@ def test_torn_round_at_crossing_resumes_exact(spark, crawl_setup, crossing_runs,
     assert filter_key_count(eng2) == filter_key_count(straight)
     if mode == "broadcast":
         assert np.array_equal(eng2.bloom._bits, straight.bloom._bits)
+
+
+@pytest.mark.parametrize("mode", ["partitioned", "bogus"])
+def test_unknown_filter_mode_raises(spark, crawl_setup, mode, tmp_path):
+    """A mode other than broadcast/cuckoo is an error, raised before the
+    engine writes anything under its run dir."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    run_dir = tmp_path / "run"
+    cfg = EngineConfig(
+        run_dir=str(run_dir), store_path=store_path, bloom=BloomConfig(enabled=True, mode=mode)
+    )
+    with pytest.raises(ValueError, match="'broadcast' or 'cuckoo'"):
+        CrawlEngine(spark, cfg)
+    assert not run_dir.exists()
+
+
+@pytest.mark.parametrize("mode", sorted(_FILTER_MODES))
+def test_start_resets_seen_filter(spark, crawl_setup, filter_forced_on, mode, tmp_path):
+    """start() begins from an empty v0 filter, also on an engine that has
+    already crawled: a second start equals a fresh engine's, filter
+    included."""
+    from grabspark.bloom import ShardedBloom
+
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    bloom = _FILTER_MODES[mode]
+    eng = run_engine(spark, store_path, seeds, tmp_path / "reused", bloom=bloom)
+    assert filter_key_count(eng) > 0
+    seeds_b = seeds[1:]
+    eng.cfg.max_rounds = 0  # stop at the state start() commits
+    eng.start(seeds_b)
+    assert int(eng.frontier.meta()["bloom_v"]) == 0
+    assert filter_key_count(eng) == 0
+    if mode == "broadcast":
+        v0 = ShardedBloom.load(eng._bloom_dir(0))
+        assert v0.n_inserted == 0 and not v0._bits.any()
+    eng.cfg.max_rounds = None
+    eng.run()
+
+    fresh = run_engine(spark, store_path, seeds_b, tmp_path / "fresh", bloom=bloom)
+    assert full_state(eng) == full_state(fresh)
+    assert filter_key_count(eng) == filter_key_count(fresh)
+
+
+@pytest.mark.parametrize("mode", sorted(_FILTER_MODES))
+def test_probe_broadcast_destroyed_next_round(spark, crawl_setup, filter_forced_on, mode, tmp_path):
+    """Each probing round ships its filter probe as a broadcast; the next
+    probing round destroys the previous one, in both modes."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    eng = run_engine(
+        spark, store_path, seeds, tmp_path / "run", bloom=_FILTER_MODES[mode], max_rounds=2
+    )
+    first = eng._bloom_bc  # round 1's probe (round 0 has nothing to probe)
+    assert first is not None and first._jbroadcast.isValid()
+    eng.cfg.max_rounds = 3
+    eng.run()
+    second = eng._bloom_bc
+    assert second is not None and second is not first
+    assert not first._jbroadcast.isValid()
+    assert second._jbroadcast.isValid()
 
 
 @pytest.mark.parametrize("mode", ["broadcast", "cuckoo"])

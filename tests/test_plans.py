@@ -169,7 +169,7 @@ def test_no_data_collect_in_graded_queries():
     allowed = (
         "partials",          # bloom partial bitmaps (fixed size per shard)
         "count().collect",   # per-partition row counts (seq assignment)
-        "shard id, filename",  # partitioned-bloom manifest rows
+        "shard id, filename",  # cuckoo-filter manifest rows
         "stats",             # per-seed round counters
         "self.partition_col",  # touched-bucket ids (bounded by n_buckets)
         "scalar aggregate",  # global max/min reduced to one row
