@@ -241,8 +241,8 @@ _PINNED_FLAGSHIP = (
     "robots_txt_parse",
 )
 
-# 35 ops graded in the round-4 window (driver rows earned; now queued
-# after the round-5 window)
+# the round-4 window's ops (driver rows earned; now queued after the
+# round-5 window), less pack_sequences, which _REGRADE_R5 re-grades
 _ROTATION_R4 = (
     "containment_dedup",
     "adaptive_crawl_delay",
@@ -273,7 +273,6 @@ _ROTATION_R4 = (
     "image_cluster_reps",
     "redirect_resolution",
     "anchor_text_topk",
-    "pack_sequences",
     "image_batch_buckets",
     "boilerplate_strip",
     "crawl_tiers",
@@ -378,7 +377,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "export_pages": _export_pages,
     }
     allq = {**entry_only, **ops.all_queries()}
-    ordered = _PINNED_FLAGSHIP + _ROTATION_R5 + _REGRADE_R5 + _ROTATION_R4
+    window = _PINNED_FLAGSHIP + _ROTATION_R5 + _REGRADE_R5
+    ordered = window + _ROTATION_R4
+    # a duplicate would silently collapse in the dict below and shift the
+    # graded 50-slot window
+    assert len(set(ordered)) == len(ordered), "duplicate name in the rotation tuples"
+    assert len(window) == 50, f"graded window holds {len(window)} names, not 50"
     out = {name: allq[name] for name in ordered}
     # already-graded rows displaced from the window, then the subsumed
     # intermediates last

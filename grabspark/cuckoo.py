@@ -39,9 +39,12 @@ deterministic even though shard file bytes may differ run-to-run.
 False-positive rate ~ 2*bucket_size / 2^16 (~0.012% at bucket_size 4);
 false negatives are impossible for inserted-and-not-deleted keys.
 
-Versioned {shard: filename} manifests give immutable files + atomic
-CURRENT + rollback for exact resume (Iceberg-style data/metadata split).
-The driver only ever sees shard ids and filenames.
+Versioned {shard: filename} manifests ``manifest-v{N}.json`` give
+immutable files + rollback for exact resume (Iceberg-style data/metadata
+split); ``CURRENT`` is a symlink to the committed manifest, swapped by
+the same pointer protocol as the snapshot tables
+(``snapshots.swap_current``).  The driver only ever sees shard ids and
+filenames.
 """
 
 from __future__ import annotations
@@ -57,6 +60,7 @@ from pandas.util import hash_array
 from pyspark.sql import functions as F
 
 from .bloom import key_hashes
+from .snapshots import current_version, swap_current
 
 BUCKET_SIZE = 4
 MAX_KICKS = 500
@@ -176,15 +180,8 @@ class PartitionedCuckoo:
     def _manifest_path(self, v: int) -> str:
         return os.path.join(self.dirpath, f"manifest-v{v}.json")
 
-    def _current_path(self) -> str:
-        return os.path.join(self.dirpath, "CURRENT")
-
     def current_version(self) -> int | None:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        return current_version(self.dirpath)
 
     def manifest(self, version: int | None = None) -> dict | None:
         v = self.current_version() if version is None else version
@@ -211,10 +208,7 @@ class PartitionedCuckoo:
         }
         with open(self._manifest_path(v), "w") as f:
             json.dump(m, f)
-        tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._current_path())
+        swap_current(self.dirpath, f"manifest-v{v}.json")
         return v
 
     def create(self) -> int:
@@ -235,8 +229,6 @@ class PartitionedCuckoo:
     @classmethod
     def load(cls, dirpath: str) -> "PartitionedCuckoo":
         with open(os.path.join(dirpath, "CURRENT")) as f:
-            v = int(f.read().strip())
-        with open(os.path.join(dirpath, f"manifest-v{v}.json")) as f:
             m = json.load(f)
         return cls(dirpath, m["n_buckets"], m["n_shards"])
 

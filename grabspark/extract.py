@@ -58,8 +58,9 @@ def links_to_frontier(trace_batch: DataFrame, seen: DataFrame, next_round: int) 
     )
     filtered = (
         # one Arrow pass yields link host + canon together (the regex
-        # parse dominates; twice-parsing doubled the Python cost)
-        exploded.withColumn("_p", udfs.url_parts_udf(F.col("url")))
+        # parse dominates; twice-parsing doubled the Python cost), and
+        # the host filter below must not re-run it
+        exploded.withColumn("_p", udfs.url_parts_once_udf(F.col("url")))
         # P4 [REF-EXACT]: exact, case-sensitive host equality; null link
         # host (unparsable) never matches
         .filter(F.col("_p.host") == F.col("host"))

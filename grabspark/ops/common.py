@@ -19,11 +19,11 @@ def memo_key(spark: SparkSession, sf: str, src_name: str, *caches: dict) -> tupl
     stay bounded and never serve stale frames (ADVICE r3).  mtime_ns +
     size (ADVICE r4) instead of float mtime: second-granularity
     filesystems can rewrite a fixture in-place without moving the float
-    clock, and the size catches same-nanosecond rewrites too.  Evicted
-    values are unpersisted when their session still runs — eviction
-    must release the block-manager storage the localCheckpoint holds,
-    not just the dict slot (dead-session entries have no storage left
-    to free; errors are tolerated)."""
+    clock, and the size catches same-nanosecond rewrites too.  The
+    values are ``localCheckpoint()`` frames, whose blocks belong to an
+    internal RDD that ``DataFrame.unpersist()`` does not touch.
+    Eviction therefore only drops the dict's reference; Spark's
+    ContextCleaner frees the blocks once the JVM collects that RDD."""
     tok = session_token(spark)
     path = os.path.normpath(sf)
     src = os.path.join(path, src_name)
@@ -35,12 +35,7 @@ def memo_key(spark: SparkSession, sf: str, src_name: str, *caches: dict) -> tupl
     key = (tok, path, stamp)
     for cache in caches:
         for k in [k for k in cache if k[0] != tok or (k[1] == path and k != key)]:
-            evicted = cache.pop(k, None)
-            if evicted is not None and hasattr(evicted, "unpersist"):
-                try:
-                    evicted.unpersist()
-                except Exception:
-                    pass  # stopped session: storage is already gone
+            del cache[k]
     return key
 
 

@@ -3,19 +3,37 @@
 No Iceberg runtime jar exists in this sandbox, so this module provides an
 Iceberg-*shaped* table: immutable parquet data files under ``<path>/data``,
 one JSON manifest per committed snapshot under ``<path>/snapshots/v{N}.json``
-(file list + row counts + engine metadata + parent pointer), and an
-atomically-replaced ``<path>/CURRENT`` pointer.  This gives the properties
-the north rule exercises — append-only snapshots, versioned time-travel
-reads for exact resume, per-snapshot lineage/metadata — with the same
-``append``/``overwrite``/``read(version)`` surface an Iceberg catalog
-would provide, so a real Iceberg catalog can replace it by config when a
-jar is present.
+(file list + row counts + engine metadata + parent pointer), and a
+``<path>/CURRENT`` symlink to the committed manifest.  This gives the
+properties the north rule exercises — append-only snapshots, versioned
+time-travel reads for exact resume, per-snapshot lineage/metadata — with
+the same ``append``/``overwrite``/``read(version)`` surface an Iceberg
+catalog would provide, so a real Iceberg catalog can replace it by config
+when a jar is present.
+
+Data files are written by the tasks' Python workers with pyarrow, each
+task reporting the files it wrote (``_write_batch``), rather than through
+``df.write.parquet``: without libhadoop, Hadoop's local filesystem forks
+a ``chmod`` process from the Spark JVM for every file and directory it
+creates, ~70 per engine round, and each fork briefly doubles the JVM's
+resident set as seen from ``/proc``.
 
 Commit protocol: data files are written first, the manifest next, and the
-CURRENT pointer last via ``os.replace`` (atomic on POSIX).  A crash
-between steps leaves orphan data files but never a torn table.  On a real
-cluster the same protocol works against any filesystem with atomic rename
-(HDFS) or conditional put (S3).
+CURRENT pointer last (``swap_current``): a new symlink to the manifest is
+created under a temp name and renamed over CURRENT, one atomic
+``rename(2)``.  A crash between steps leaves orphan data files (or a
+stray ``CURRENT.tmp.*`` link, which nothing reads) but never a torn
+table.  The pointer is a symlink rather than a small file because ext4
+(``auto_da_alloc``) flushes a freshly written file synchronously when it
+is renamed over an existing one: ~50-60 ms per commit on a virtio disk,
+five commits per engine round.  A symlink has no data blocks to flush,
+so the swap costs microseconds.  Durability is unchanged: the pointer
+stays atomic under a process crash, and after a power loss it is the
+old or the new link, since a short symlink's target lives in its
+journaled inode.  Neither manifests nor data files are fsynced (adding
+a flush would pay the same ~50 ms again).  On a real cluster the same
+protocol works against any filesystem with atomic rename (HDFS) or
+conditional put (S3).
 """
 
 from __future__ import annotations
@@ -23,6 +41,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import threading
 import uuid
 
@@ -51,6 +70,92 @@ def _file_bytes(files: list[str]) -> int:
     return sum(os.path.getsize(f) for f in files)
 
 
+# -- CURRENT pointer: the one writer and reader shared with cuckoo.py ----------
+
+_VERSION_RE = re.compile(r"v(\d+)\.json$")
+
+
+def swap_current(dirpath: str, target: str) -> None:
+    """Atomically point ``<dirpath>/CURRENT`` at ``target``, a manifest
+    path relative to ``dirpath`` whose name ends in ``v{N}.json``.  The
+    manifest must already be written.  The rename's source is a symlink,
+    so ext4 has no data blocks to flush (see the module docstring)."""
+    cur = os.path.join(dirpath, "CURRENT")
+    tmp = f"{cur}.tmp.{uuid.uuid4().hex}"
+    os.symlink(target, tmp)
+    os.replace(tmp, cur)
+
+
+def current_version(dirpath: str) -> int | None:
+    """Version ``N`` of the manifest ``<dirpath>/CURRENT`` links to, or
+    None before the first commit."""
+    try:
+        target = os.readlink(os.path.join(dirpath, "CURRENT"))
+    except FileNotFoundError:
+        return None
+    return int(_VERSION_RE.search(target).group(1))
+
+
+def _parquet_writer(batch_dir: str, part_col: str | None):
+    """``mapInArrow`` body for ``SnapshotTable._write_batch``: write one
+    task's batches under ``batch_dir`` and yield one row per file.  With
+    ``part_col`` each batch is stably sorted on it and every run of equal
+    values goes to that bucket's file in ``_pb=<v>/`` (a null bucket to
+    Hive's default dir name, recorded with no bucket), so a file holds
+    its bucket's rows in task order."""
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        tag = uuid.uuid4().hex
+        sinks: dict = {}  # bucket -> [writer, path, rows]
+
+        def put(key, rb):
+            s = sinks.get(key)
+            if s is None:
+                d = batch_dir
+                if part_col is not None:
+                    d = os.path.join(
+                        batch_dir, f"_pb={'__HIVE_DEFAULT_PARTITION__' if key is None else key}"
+                    )
+                os.makedirs(d, exist_ok=True)
+                path = os.path.join(d, f"part-{len(sinks):05d}-{tag}.parquet")
+                s = sinks[key] = [pq.ParquetWriter(path, rb.schema), path, 0]
+            s[0].write_batch(rb)
+            s[2] += rb.num_rows
+
+        try:
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                if part_col is None:
+                    put(None, rb)
+                    continue
+                rb = rb.take(
+                    pc.sort_indices(rb, [(part_col, "ascending")], null_placement="at_end")
+                )
+                runs = pc.run_end_encode(rb.column(part_col))
+                start = 0
+                for end, key in zip(runs.run_ends.to_pylist(), runs.values.to_pylist()):
+                    put(key, rb.slice(start, end - start))
+                    start = end
+        finally:
+            for w, _path, _rows in sinks.values():
+                w.close()
+        yield pa.RecordBatch.from_pydict(
+            {
+                "path": [s[1] for s in sinks.values()],
+                "bucket": [None if k is None else int(k) for k in sinks],
+                "rows": [s[2] for s in sinks.values()],
+            },
+            schema=pa.schema([("path", pa.string()), ("bucket", pa.int64()), ("rows", pa.int64())]),
+        )
+
+    return write
+
+
 class SnapshotTable:
     def __init__(
         self,
@@ -77,15 +182,8 @@ class SnapshotTable:
 
     # -- manifest plumbing ---------------------------------------------------
 
-    def _current_path(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
     def current_version(self) -> int | None:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        return current_version(self.path)
 
     def manifest(self, version: int | None = None) -> dict | None:
         v = self.current_version() if version is None else version
@@ -140,49 +238,33 @@ class SnapshotTable:
         mpath = os.path.join(self.path, "snapshots", f"v{v}.json")
         with open(mpath, "w") as f:
             json.dump(manifest, f)
-        tmp = self._current_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._current_path())
+        # the manifest is a new name and CURRENT a symlink swap, so no
+        # written file is renamed over another (no ext4 flush)
+        swap_current(self.path, f"snapshots/v{v}.json")
         return v
 
     # -- writes --------------------------------------------------------------
 
     def _write_batch(self, df: DataFrame) -> tuple[list[str], int, dict]:
+        """Write ``df`` as one batch of new parquet files: each task's
+        Python worker writes its rows with pyarrow (one file per bucket
+        under ``_pb=<v>/`` for a bucketed table) and reports one
+        ``(path, bucket, rows)`` row per file, so the manifest lists
+        exactly the files of the successful task attempts (the Iceberg
+        writer -> DataFile-list commit, the same shape as the cuckoo
+        filter's shard files; why not ``df.write``: module docstring).
+        An empty ``df`` writes no file."""
         batch_dir = os.path.join(self.path, "data", f"batch-{uuid.uuid4().hex}")
-        parts: dict[str, int] = {}
-        if self.partition_col is not None and self.partition_col in df.columns:
-            # shadow copy so the real column stays in the data files
-            (
-                df.withColumn("_pb", F.col(self.partition_col))
-                .write.mode("overwrite")
-                .partitionBy("_pb")
-                .parquet(batch_dir)
-            )
-            files = []
-            for root, _dirs, fnames in os.walk(batch_dir):
-                for f in fnames:
-                    if f.endswith(".parquet"):
-                        p = os.path.join(root, f)
-                        files.append(p)
-                        seg = [s for s in root.split(os.sep) if s.startswith("_pb=")]
-                        if seg:
-                            try:
-                                parts[p] = int(seg[-1].split("=", 1)[1])
-                            except ValueError:  # null bucket (hive default dir)
-                                pass
-            files = sorted(files)
-        else:
-            df.write.mode("overwrite").parquet(batch_dir)
-            files = sorted(
-                os.path.join(batch_dir, f)
-                for f in os.listdir(batch_dir)
-                if f.endswith(".parquet")
-            )
+        bucketed = self.partition_col is not None and self.partition_col in df.columns
+        written = df.mapInArrow(
+            _parquet_writer(batch_dir, self.partition_col if bucketed else None),
+            "path string, bucket long, rows long",
+        ).collect()  # tiny: one (path, bucket, rows) row per written file
+        files = sorted(r["path"] for r in written)
+        parts = {r["path"]: int(r["bucket"]) for r in written if r["bucket"] is not None}
         if self._schema is None:
             self._schema = df.schema
-        rows = self._count_parquet_rows(files)
-        return files, rows, parts
+        return files, sum(int(r["rows"]) for r in written), parts
 
     def _count_parquet_rows(self, files: list[str]) -> int:
         import pyarrow.parquet as pq

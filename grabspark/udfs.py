@@ -27,16 +27,20 @@ from pyspark.sql.types import (
 from . import imaging, textkit, urlkit
 
 canon_ref_udf = F.pandas_udf(urlkit.canon_ref_s, StringType())
-url_parts_udf = F.pandas_udf(
-    urlkit.url_parts_s,
-    StructType(
-        [
-            StructField("url_canon", StringType()),
-            StructField("host", StringType()),
-            StructField("fetch_key", StringType()),
-        ]
-    ),
+_URL_PARTS = StructType(
+    [
+        StructField("url_canon", StringType()),
+        StructField("host", StringType()),
+        StructField("fetch_key", StringType()),
+    ]
 )
+url_parts_udf = F.pandas_udf(urlkit.url_parts_s, _URL_PARTS)
+# Same kernel for a column that a Filter then reads: Catalyst substitutes
+# a deterministic UDF into the pushed-down predicate, so the plan would
+# parse every url twice (two ArrowEvalPython nodes, two Python workers
+# per task).  The nondeterministic flag keeps the Filter above the one
+# evaluation; the kernel itself is pure.
+url_parts_once_udf = F.pandas_udf(urlkit.url_parts_s, _URL_PARTS).asNondeterministic()
 canon_full_udf = F.pandas_udf(urlkit.canon_full_s, StringType())
 fetch_key_udf = F.pandas_udf(urlkit.fetch_key_s, StringType())
 host_of_udf = F.pandas_udf(urlkit.host_of_s, StringType())

@@ -754,6 +754,38 @@ def test_probe_broadcast_destroyed_next_round(spark, crawl_setup, filter_forced_
     assert second._jbroadcast.isValid()
 
 
+@pytest.mark.parametrize("mode", sorted(_FILTER_MODES))
+def test_no_commit_renames_a_file_over_another(spark, crawl_setup, filter_forced_on, mode, tmp_path, monkeypatch):
+    """ext4 flushes a freshly written file synchronously when it is
+    renamed over an existing one (~50 ms).  Every rename a 2-round crawl
+    makes, snapshot and cuckoo commits included, must have a symlink as
+    its source or a destination that does not exist yet."""
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    renames = []
+
+    def spy(real):
+        def rename(src, dst, *args, **kwargs):
+            renames.append((str(src), str(dst), os.path.islink(src), os.path.lexists(dst)))
+            return real(src, dst, *args, **kwargs)
+
+        return rename
+
+    monkeypatch.setattr(os, "replace", spy(os.replace))
+    monkeypatch.setattr(os, "rename", spy(os.rename))
+    eng = run_engine(
+        spark, store_path, seeds, tmp_path / "run", bloom=_FILTER_MODES[mode], max_rounds=2
+    )
+    monkeypatch.undo()
+    assert eng.frontier.meta()["round"] == 2  # rounds 0 and 1 committed
+    over_files = [(src, dst) for src, dst, link, exists in renames if exists and not link]
+    assert not over_files
+    # the commits did run through the spy, the cuckoo filter's included
+    dsts = {os.path.dirname(dst) for _src, dst, _link, _exists in renames}
+    assert {eng.frontier.path, eng.trace.path, eng.seen.path, eng.metrics.path} <= dsts
+    if mode == "cuckoo":
+        assert eng.pbloom.dirpath in dsts
+
+
 @pytest.mark.parametrize("mode", ["broadcast", "cuckoo"])
 def test_recrawl_before_and_after_filter_built(spark, crawl_setup, crossing_threshold, mode, tmp_path):
     """TTL re-crawl on an unbuilt filter only deletes seen rows and the

@@ -159,6 +159,26 @@ def test_single_url_parse_pass_in_bench_round(spark):
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", p)) == 1
 
 
+def test_links_to_frontier_parses_each_link_once(spark):
+    """The same-host Filter reads the url_parts struct: pushing it below
+    the projection would copy the UDF into the predicate, parsing every
+    link twice and holding a second Python worker per task."""
+    import re
+
+    from grabspark.extract import links_to_frontier
+
+    trace = spark.createDataFrame(
+        [(0, "h.test", 1, True, ["http://h.test/a", "http://x.test/b"])],
+        "seed_idx int, host string, fetch_seq long, ok boolean, links array<string>",
+    )
+    seen = spark.createDataFrame([(0, "http://h.test/")], "seed_idx int, url_canon string")
+    out = links_to_frontier(trace, seen, 1)
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan(out))) == 1
+    assert [(r.url, r.host, r.parent_seq, r.link_idx) for r in out.collect()] == [
+        ("http://h.test/a", "h.test", 1, 0)
+    ]
+
+
 def test_no_data_collect_in_graded_queries():
     """grep-style guard: every .collect() in the package is metadata-
     scale (bitmap partials, shard filenames, per-partition counters,

@@ -1,8 +1,10 @@
 """Unit tests: snapshot tables (CK1), sequence assignment (W2), robots
 matching (X3)."""
 
+import itertools
 import json
 import os
+import threading
 import uuid
 
 import pytest
@@ -51,13 +53,99 @@ def test_snapshot_empty_read_has_schema(spark, tmp_path):
 
 
 def test_snapshot_current_pointer_is_atomic_file(spark, tmp_path):
+    """CURRENT is a symlink (swapped by one atomic rename) that resolves
+    to the committed manifest, and every file it lists exists."""
     t = SnapshotTable(spark, str(tmp_path / "a"))
     t.overwrite(spark.createDataFrame([(1,)], "x int"))
     cur = os.path.join(str(tmp_path / "a"), "CURRENT")
     assert os.path.exists(cur)
-    v = int(open(cur).read())
+    assert os.path.islink(cur)
+    v = t.current_version()
+    assert os.readlink(cur) == f"snapshots/v{v}.json"
     m = json.load(open(os.path.join(str(tmp_path / "a"), "snapshots", f"v{v}.json")))
+    assert json.load(open(cur)) == m and m["version"] == v
     assert all(os.path.exists(f) for f in m["files"])
+
+
+@pytest.fixture(params=["snapshot", "cuckoo"])
+def pointer_table(request, spark, tmp_path):
+    """(table, root dir, commit) for both users of the CURRENT pointer
+    protocol: ``commit()`` makes one new version without a Spark job."""
+    root = str(tmp_path / request.param)
+    if request.param == "snapshot":
+        t = SnapshotTable(spark, root)
+        t.overwrite(spark.createDataFrame([(1,), (2,)], "x int"))
+        n = itertools.count()
+        return t, root, lambda: t.commit_meta({"i": next(n)})
+    from grabspark.cuckoo import PartitionedCuckoo
+
+    t = PartitionedCuckoo(root, n_buckets=1 << 4, n_shards=2)
+    t.create()
+    t.update(spark.createDataFrame([("k1",), ("k2",)], "k string"), "k")
+    # alternate between the two real states v0 and v1: every rollback
+    # targets the one CURRENT is not, so each is a new version
+    return t, root, lambda: t.rollback(1 - t.current_version() % 2)
+
+
+def test_pointer_reader_never_sees_a_torn_commit(pointer_table):
+    """One thread commits 200 versions while another loops on
+    current_version() + manifest(): every read sees a committed version,
+    never None or an error, and versions never go backwards."""
+    table, _root, commit = pointer_table
+    v0 = table.current_version()
+    reads, errors = [], []
+    stop = threading.Event()
+
+    def reader():
+        while True:
+            last = stop.is_set()  # the final read starts after the last commit
+            try:
+                v = table.current_version()
+                m = table.manifest()
+                reads.append((v, m["version"]))
+            except Exception as e:  # noqa: BLE001 - the assertion reports it
+                errors.append(e)
+                return
+            if last:
+                return
+
+    th = threading.Thread(target=reader)
+    th.start()
+    try:
+        for _ in range(200):
+            commit()
+    finally:
+        stop.set()
+        th.join()
+    assert not errors
+    assert reads and all(v is not None and m >= v for v, m in reads)
+    flat = [x for pair in reads for x in pair]
+    assert flat == sorted(flat)
+    assert reads[-1] == (v0 + 200, v0 + 200)
+
+
+def test_pointer_ignores_leftover_tmp_link(pointer_table, monkeypatch):
+    """A crash between creating the new link and renaming it over
+    CURRENT leaves a ``CURRENT.tmp.*`` link: reads still see the last
+    committed version, and the next commit proceeds normally."""
+    table, root, commit = pointer_table
+    v = table.current_version()
+    before = table.manifest()
+
+    def crash(src, dst):
+        raise OSError("simulated crash before rename")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        commit()
+    monkeypatch.undo()
+    tmp = [f for f in os.listdir(root) if f.startswith("CURRENT.tmp.")]
+    assert len(tmp) == 1 and os.path.islink(os.path.join(root, tmp[0]))
+    assert table.current_version() == v
+    assert table.manifest() == before
+    commit()
+    assert table.current_version() == v + 1
+    assert table.manifest()["parent"] == v
 
 
 # -- seq ---------------------------------------------------------------------
@@ -285,6 +373,57 @@ def test_snapshot_compact_bucketed_one_file_per_bucket(spark, tmp_path):
     got = sorted(r.id for r in t.read(bucket=2).collect())
     assert got == [i for i in range(500) if i % 4 == 2]
     assert len(t.files_for_bucket(2)) == 1
+
+
+def test_write_batch_bucketed_layout_rows_and_order(spark, tmp_path):
+    """A bucketed batch is parquet files only, one per (task, bucket) under
+    ``_pb=<v>/``, with none of Hadoop's commit files (``_SUCCESS``,
+    ``.crc``, ``_temporary``).  Manifest rows and per-file buckets come
+    from the writers; a null bucket lands in Hive's default dir with no
+    bucket entry; each file keeps its task's row order."""
+    import pyarrow.parquet as pq
+
+    t = SnapshotTable(spark, str(tmp_path / "wb"), partition_col="bucket")
+    df = spark.range(0, 90, numPartitions=3).select(
+        F.col("id"),
+        F.when(F.col("id") % 10 == 0, F.lit(None))
+        .otherwise(F.col("id") % 3)
+        .cast("int")
+        .alias("bucket"),
+    )
+    m = t.manifest(t.overwrite(df))
+    (batch,) = {f.split(os.sep + "_pb=")[0] for f in m["files"]}
+    on_disk = sorted(os.path.join(r, f) for r, _d, fs in os.walk(batch) for f in fs)
+    assert on_disk == m["files"] and len(on_disk) == 3 * 4
+    assert m["rows"] == 90 == sum(pq.ParquetFile(f).metadata.num_rows for f in on_disk)
+    for f in on_disk:
+        ids = pq.read_table(f).column("id").to_pylist()
+        buckets = set(pq.read_table(f).column("bucket").to_pylist())
+        assert ids == sorted(ids)
+        seg = os.path.basename(os.path.dirname(f))
+        if seg == "_pb=__HIVE_DEFAULT_PARTITION__":
+            assert f not in m["parts"] and buckets == {None}
+        else:
+            assert buckets == {m["parts"][f]} == {int(seg.split("=")[1])}
+    assert sorted(r.id for r in t.read().collect()) == list(range(90))
+    assert sorted(r.id for r in t.read(bucket=1).collect()) == [
+        i for i in range(90) if i % 10 and i % 3 == 1
+    ]
+
+
+def test_write_batch_unbucketed_and_empty(spark, tmp_path):
+    """An unbucketed batch writes one parquet file per non-empty task
+    straight into its batch dir; an empty batch writes no file and
+    commits an empty ``added`` list."""
+    t = SnapshotTable(spark, str(tmp_path / "wu"))
+    m = t.manifest(t.overwrite(spark.range(0, 10, numPartitions=4)))
+    (batch,) = {os.path.dirname(f) for f in m["files"]}
+    assert sorted(os.path.join(batch, f) for f in os.listdir(batch)) == m["files"]
+    assert len(m["files"]) == 4 and m["rows"] == 10
+    v = t.append(spark.createDataFrame([], "id long"))
+    assert t.manifest(v)["added"] == [] and t.row_count() == 10
+    assert t.read_delta(v).count() == 0
+    assert sorted(r.id for r in t.read().collect()) == list(range(10))
 
 
 def test_parse_robots_txt_to_rules(spark):
