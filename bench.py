@@ -1,12 +1,14 @@
 #!/usr/bin/env python
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the frontier
-scheduling-round throughput (the BASELINE.json north metric).  Prints
-ONE JSON line:
+the sf0.1 test data, see SF_DIR) on local[$SPARK_GRAFT_CPUS], plus the
+image-validation and decode-once rounds.  Prints ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
-   "frontier": {"n": ..., "urls_per_sec": ..., "scheduled": ...}}
+   "image_round": {...}, "decode_once": {...}}
+
+The crawl round's throughput is crawlbench's ``urls_per_s`` through
+``CrawlEngine`` (``python3 perfbench/run.py``), not part of this script.
 
 Runnable both as `python bench.py` and
 `spark-submit --py-files grabspark.zip bench.py`.
@@ -24,9 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# 4M default: a machine-sized round (a real 10^10 crawl's rounds are
-# huge, and larger batches amortize fixed per-round overhead honestly)
-FRONTIER_N = int(os.environ.get("SPARK_GRAFT_FRONTIER_N", "4000000"))
 # image-validation round size: 48x48 RGB -> ~6.9 KB/image, 120k ~ 830 MB
 IMAGES_N = int(os.environ.get("SPARK_GRAFT_IMAGES_N", "120000"))
 
@@ -140,29 +139,9 @@ HEADLINE = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from grabspark.session import default_session
 
-    from grabspark.session import driver_memory
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("grabspark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(CPUS) * 2, 8)))
-        # honor the bucketed seen/store layout in the frontier round
-        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", driver_memory())
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from grabspark.session import attach_package
-
-    attach_package(spark)
+    spark = default_session("grabspark-bench", CPUS, max(int(CPUS) * 2, 8))
 
     from grabspark import ops
 
@@ -173,8 +152,8 @@ def main() -> None:
     queries["q1_pricing_summary"](spark, SF_DIR).count()
     queries["dedup_exact"](spark, SF_DIR).count()
     spark.catalog.clearCache()
-    # interleaved best-of-REPS passes (same protocol as the frontier and
-    # image rounds, BENCH/BASELINE.md): this box's effective CPU varies
+    # interleaved best-of-REPS passes (same protocol as the image
+    # rounds, BENCH/BASELINE.md): this box's effective CPU varies
     # ~10x over minutes, so a single-shot number measures the weather;
     # full-pass interleaving gives every query equal exposure
     reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "2"))
@@ -190,46 +169,9 @@ def main() -> None:
     for name in HEADLINE:
         print(f"# {name}: {timings[name]}s", file=sys.stderr)
 
-    # frontier scheduling-round throughput (north metric) — seen/store
-    # stored BUCKETED on their join keys (the 100 TB co-located-join
-    # layout): the per-round anti-join and fetch join read them with no
-    # exchange; only the candidate batch shuffles
     from grabspark import bench_core
 
     base = tempfile.mkdtemp(prefix="grabspark-bench-")
-    # hashed seen layout (r4): the anti-join probes the 8-byte
-    # xxhash64(url_canon) key; the string column stays in the table for
-    # audit but is pruned from the probe scan
-    bench_core.write_bucketed(
-        bench_core.synth_seen_hash_df(spark, FRONTIER_N, FRONTIER_N, 1024),
-        "seen_b", os.path.join(base, "seen_tbl"), ["key_hash"],
-    )
-    bench_core.write_bucketed(
-        bench_core.synth_store_hash_df(spark, FRONTIER_N // 2, FRONTIER_N, 1024),
-        "store_b", os.path.join(base, "store_tbl"), ["fkey_hash"],
-    )
-    seen_path, store_path = "table:seen_b", "table:store_b"
-    from grabspark.bloom import bloom_bits_for
-
-    bl = bench_core.build_seen_bloom(spark, seen_path, n_bits=bloom_bits_for(FRONTIER_N))
-    # warm-up round (JIT/codegen + sandbox CPU ramp), then best-of-2
-    # measured rounds (this box's effective CPU varies with time)
-    bench_core.run_frontier_round(
-        spark, FRONTIER_N // 4, seen_path, store_path, bl, space_unit=FRONTIER_N
-    )
-    fr = max(
-        (
-            bench_core.run_frontier_round(spark, FRONTIER_N, seen_path, store_path, bl)
-            for _ in range(2)
-        ),
-        key=lambda r: r.urls_per_sec,
-    )
-    print(
-        f"# frontier: {fr.n_frontier} urls in {fr.elapsed_sec:.2f}s = "
-        f"{fr.urls_per_sec:,.0f} urls/s ({fr.scheduled} scheduled)",
-        file=sys.stderr,
-    )
-
     # image-validation throughput (the graft's image axis): the north
     # rule's per-row invariant (decoded-pixel allclose/PSNR + phash) as
     # a rate.  Store generation is untimed; one warm-up, then best-of-3
@@ -273,22 +215,13 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    total = round(sum(timings.values()) + fr.elapsed_sec + ir.elapsed_sec + dr.composed_sec, 3)
+    total = round(sum(timings.values()) + ir.elapsed_sec + dr.composed_sec, 3)
     out = {
-        "metric": "headline_ops_total+frontier_round+image_round",
+        "metric": "headline_ops_total+image_round+decode_once_round",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
-        "frontier": {
-            "n": fr.n_frontier,
-            "elapsed_sec": round(fr.elapsed_sec, 3),
-            "urls_per_sec": round(fr.urls_per_sec),
-            "scheduled": fr.scheduled,
-            "n_seen": fr.n_seen,
-            "n_store": fr.n_store,
-            "cpus": int(CPUS),
-        },
         "image_round": {
             "n": ir.n_images,
             "bytes": ir.n_bytes,

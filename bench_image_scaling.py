@@ -3,12 +3,12 @@
 graft's image axis): decode + PSNR/allclose + phash over an
 input_hint-shaped store, at local[N] vs local[4N] on the same parquet.
 
-Same protocol as bench_scaling.py (see its docstring for why): one
-fresh spark-submit JVM per measurement, configs interleaved
-(N, 4N, N, 4N, ...) against pre-generated input, best-of per config.
-The pipeline is embarrassingly parallel (scan -> mapInPandas -> partial
-agg; no shuffle until the final 5-scalar agg), so this evidences the
-payload pipeline's N->4N scaling alongside the frontier round's.
+The sandbox's available CPU varies over time (hypervisor steal), so the
+protocol is one fresh spark-submit JVM per measurement, configs
+interleaved (N, 4N, N, 4N, ...) against pre-generated input, best-of
+per config.  The pipeline is embarrassingly parallel (scan ->
+mapInPandas -> partial agg; no shuffle until the final 5-scalar agg),
+so this evidences the payload pipeline's N->4N scaling.
 
 Modes:
     --prepare  --data DIR --n-images M       generate the store once
@@ -39,26 +39,10 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 
 
 def _session(cores: int, app: str):
-    from pyspark.sql import SparkSession
+    from grabspark.session import default_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        # identical plan at both parallelism levels — only core count differs
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from grabspark.session import attach_package
-
-    attach_package(spark)
-    return spark
+    # identical plan at both parallelism levels — only core count differs
+    return default_session(app, cores, 64)
 
 
 def prepare(data_dir: str, n_images: int, mode: str = "validate") -> None:

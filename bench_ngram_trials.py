@@ -23,20 +23,8 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[{cpus}]")
-         .appName("ngram-trial")
-         .config("spark.sql.shuffle.partitions", str(max(int({cpus}) * 2, 8)))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .config("spark.driver.memory", {mem!r})
-         .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-from grabspark.session import attach_package
-attach_package(spark)
+from grabspark.session import default_session
+spark = default_session("ngram-trial", {cpus!r}, max(int({cpus!r}) * 2, 8))
 from grabspark import ops
 q = ops.all_queries()[{name!r}]
 # warm-up pass absorbs JVM/codegen cold start; min-of-2 in-JVM reps
@@ -56,9 +44,7 @@ spark.stop()
 
 
 def run_one(name: str) -> float:
-    from grabspark.session import driver_memory
-
-    code = _CHILD.format(repo=REPO, cpus=CPUS, name=name, sf=SF_DIR, mem=driver_memory())
+    code = _CHILD.format(repo=REPO, cpus=CPUS, name=name, sf=SF_DIR)
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=900
     )

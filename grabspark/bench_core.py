@@ -1,255 +1,35 @@
-"""Frontier-throughput benchmark core (BASELINE.json metric:
-"frontier-dedupe + scheduled-fetch URLs/sec on a 10^10-URL synthetic
-frontier").
+"""Image-axis benchmark rounds and the bucketed-table writer.
+
+The crawl round itself is timed through ``CrawlEngine`` by crawlbench
+(``perfbench/``); this module keeps the two image rounds ``bench.py``
+and ``bench_image_scaling.py`` time, plus ``write_bucketed``, which
+registers a store as a bucketed catalog table for the engine's
+``table:`` store path.
 
 Everything is generated distributed-ly with ``spark.range`` — no driver-
 side data, no bulk collect — so the same code is honest at cluster
-scale.  URL ids live on a lattice inside the 10^10 keyspace (the
-*addressable* frontier space; one measured round materializes a
-machine-sized batch, exactly as a real 10^10 crawl processes rounds, not
-the whole space at once — caveat recorded in BENCH/BASELINE.md).
-
-Key-space design (shared lattice so the stages do real work):
-  candidates fold into [0, 0.7u)  -> ~1.4 duplicate rows per key (A1)
-  seen table draws from [0, 2u)   -> ~40% of candidate keys already seen (J1/J2)
-  store covers [0, 0.5u)          -> ~70% fetch hit rate (J3)
-
-One measured "scheduling round" is the engine's real dataflow:
-  Arrow-UDF canonicalize+host-parse (X2) -> first-occurrence dedupe (A1)
-  -> Bloom prefilter (J2, map-side before the shuffle) -> exact
-  anti-join vs seen (J1) -> salted two-phase per-host rank + politeness
-  budget (W1; 30% hot-host skew) -> fetch lookup join (J3) -> count.
+scale.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 import time
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import udfs
-from .bloom import ShardedBloom, build_partials, merge_partials_into, reduce_partials
-from .extract import dedupe_first_occurrence
-
-KEYSPACE = 10_000_000_000  # 10^10 addressable URL ids
-
-
-@dataclass
-class FrontierBenchResult:
-    n_frontier: int
-    n_seen: int
-    n_store: int
-    scheduled: int
-    elapsed_sec: float
-    urls_per_sec: float
-
-
-def _stride(space_unit: int) -> int:
-    return max(KEYSPACE // (4 * space_unit), 1)
-
-
-def _host_expr(key_col: str, n_hosts: int, hot_frac: float = 0.3):
-    """Host id with a hot host: ``hot_frac`` of rows land on host 0 —
-    the skew the salted rank must absorb."""
-    h = F.pmod(F.xxhash64(F.col(key_col) + 7), F.lit(1000))
-    return F.when(h < int(hot_frac * 1000), F.lit(0)).otherwise(
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_hosts))
-    )
-
-
-def _canon_url(key_col: str, host_col: str):
-    return F.concat(
-        F.lit("http://h"),
-        F.col(host_col).cast("string"),
-        F.lit(".test/p"),
-        F.col(key_col).cast("string"),
-    )
-
-
-def synth_candidates(
-    spark: SparkSession, n: int, n_hosts: int, space_unit: int | None = None
-) -> DataFrame:
-    """n candidate frontier rows over lattice keys in [0, 0.7u);
-    ~20% carry trailing-slash surface variants (canon does real work).
-    ``space_unit`` pins the lattice (pass the full-round size when
-    generating a smaller warm-up batch so seen/store overlap holds)."""
-    u = space_unit or n
-    space = max(int(u * 0.7), 1)
-    st = _stride(u)
-    return (
-        spark.range(n)
-        .withColumn("k", F.pmod(F.xxhash64(F.col("id")), F.lit(space)) * st)
-        .withColumn("hostid", _host_expr("k", n_hosts))
-        .select(
-            F.lit(0).alias("seed_idx"),
-            F.concat(
-                _canon_url("k", "hostid"),
-                F.when(F.pmod(F.xxhash64(F.col("k") + 99), 5) == 0, F.lit("/")).otherwise(F.lit("")),
-            ).alias("url"),
-            F.col("id").cast("long").alias("parent_seq"),
-            F.lit(0).alias("link_idx"),
-            F.lit(0).alias("birth_round"),
-        )
-    )
-
-
-def synth_seen_df(spark: SparkSession, n: int, n_frontier: int, n_hosts: int) -> DataFrame:
-    """Seen table rows over lattice keys in [0, 2*n_frontier)."""
-    space = max(2 * n_frontier, 1)
-    st = _stride(n_frontier)
-    return (
-        spark.range(n)
-        .withColumn("k", F.pmod(F.xxhash64(F.col("id") + 13), F.lit(space)) * st)
-        .withColumn("hostid", _host_expr("k", n_hosts))
-        .select(
-            F.lit(0).alias("seed_idx"),
-            _canon_url("k", "hostid").alias("url_canon"),
-            F.col("id").cast("long").alias("first_seq"),
-            F.lit(0).alias("round"),
-        )
-        .dropDuplicates(["url_canon"])
-    )
-
-
-def synth_seen_hash_df(
-    spark: SparkSession, n: int, n_frontier: int, n_hosts: int
-) -> DataFrame:
-    """Seen table in the hashed layout: key_hash first (the bucket/sort
-    key), url_canon retained for the confirm/audit path only."""
-    return synth_seen_df(spark, n, n_frontier, n_hosts).select(
-        "seed_idx",
-        F.xxhash64("url_canon").alias("key_hash"),
-        "url_canon",
-        "first_seq",
-        "round",
-    )
-
-
-def synth_seen(spark: SparkSession, n: int, n_frontier: int, n_hosts: int, path: str) -> str:
-    synth_seen_df(spark, n, n_frontier, n_hosts).write.mode("overwrite").parquet(path)
-    return path
-
-
-def synth_store_df(spark: SparkSession, n: int, n_frontier: int, n_hosts: int) -> DataFrame:
-    """Page store covering lattice keys [0, n) (n ~ 0.5*n_frontier for a
-    ~70% hit rate); metadata payload only — the scheduling metric joins,
-    full decode/validation is benchmarked separately by
-    ``run_image_round`` below."""
-    st = _stride(n_frontier)
-    return (
-        spark.range(n)
-        .withColumn("k", F.col("id") * st)
-        .withColumn("hostid", _host_expr("k", n_hosts))
-        .select(
-            _canon_url("k", "hostid").alias("image_id"),
-            F.lit(24).alias("w"),
-            F.lit(24).alias("h"),
-            F.lit("raw").alias("fmt"),
-            F.md5(F.col("k").cast("string")).alias("caption"),
-            F.xxhash64("k").alias("phash"),
-        )
-    )
-
-
-def synth_store_hash_df(
-    spark: SparkSession, n: int, n_frontier: int, n_hosts: int
-) -> DataFrame:
-    """Page store in the hashed layout: fkey_hash first (bucket/sort
-    key), image_id retained for audit only."""
-    s = synth_store_df(spark, n, n_frontier, n_hosts)
-    return s.select(
-        F.xxhash64("image_id").alias("fkey_hash"),
-        "image_id", "w", "h", "fmt", "caption", "phash",
-    )
-
-
-def synth_store(spark: SparkSession, n: int, n_frontier: int, n_hosts: int, path: str) -> str:
-    synth_store_df(spark, n, n_frontier, n_hosts).write.mode("overwrite").parquet(path)
-    return path
-
-
-# -- bucketed storage layout (the 100 TB design: SURVEY J1/J3) ---------------
-#
-# The seen table and page store are the two BIG sides of every round's
-# joins.  Stored as Spark bucketed tables on their join keys (64 buckets
-# = shuffle.partitions), the per-round anti-join and fetch join read them
-# pre-partitioned: only the (much smaller) candidate side shuffles, the
-# 10^10-row tables never move.  This is the bucketing/co-located-join
-# layout the scale design prescribes; bucket metadata travels as catalog
-# DDL (CREATE TABLE ... CLUSTERED BY ... LOCATION) so any session can
-# re-attach to the same files.
-
-N_BUCKETS = 64
-
-# bucketed by url_canon ALONE: equal urls co-locate regardless of seed,
-# which satisfies ClusteredDistribution for the (seed_idx, url_canon)
-# anti-join AND survives Catalyst constant-folding the seed_idx key away
-# (a (seed_idx, url_canon) bucket spec stops matching once the literal
-# seed filter is pushed down)
-SEEN_TBL_DDL = (
-    "CREATE TABLE IF NOT EXISTS {name} "
-    "(seed_idx INT, url_canon STRING, first_seq BIGINT, round INT) "
-    "USING parquet CLUSTERED BY (url_canon) "
-    "SORTED BY (url_canon) INTO {nb} BUCKETS LOCATION '{path}'"
-)
-
-# Hashed seen layout (VERDICT r3 task 2): the anti-join stage's (4,16)
-# scaling wall is memory bandwidth — every round re-scans the full
-# string-keyed seen table (~48 B/row of URL text) just to probe key
-# equality.  Storing the join key as xxhash64(url_canon) (8 B) shrinks
-# the bytes the MAIN probe scan touches ~7x; the string column stays in
-# the table and (since r5) the CONFIRM PATH in run_frontier_round
-# re-checks every hash-matched row against it, so the benched shape is
-# string-exact at any keyspace — no silently dropped URL even at the
-# 10^10-key frontier, where per-round collision probability reaches the
-# percent range.  tests/test_bench_layouts.py pins both equivalence with
-# the string layout (including a synthetically planted collision) and
-# the plan properties (keys-only main scan, single confirm scan, reused
-# candidate exchange).  The GRADED engine keeps full string-key
-# semantics throughout.
-SEEN_HASH_TBL_DDL = (
-    "CREATE TABLE IF NOT EXISTS {name} "
-    "(seed_idx INT, key_hash BIGINT, url_canon STRING, first_seq BIGINT, round INT) "
-    "USING parquet CLUSTERED BY (key_hash) "
-    "SORTED BY (key_hash) INTO {nb} BUCKETS LOCATION '{path}'"
-)
-STORE_TBL_DDL = (
-    "CREATE TABLE IF NOT EXISTS {name} "
-    "(image_id STRING, w INT, h INT, fmt STRING, caption STRING, phash BIGINT) "
-    "USING parquet CLUSTERED BY (image_id) "
-    "SORTED BY (image_id) INTO {nb} BUCKETS LOCATION '{path}'"
-)
-# Hashed store layout (r4, same rationale as SEEN_HASH_TBL_DDL): the
-# fetch lookup join probes fkey_hash = xxhash64(image_id) (8 B) instead
-# of the URL string; image_id stays in the files for the audit path but
-# the join scan reads only (fkey_hash, fmt, phash).
-STORE_HASH_TBL_DDL = (
-    "CREATE TABLE IF NOT EXISTS {name} "
-    "(fkey_hash BIGINT, image_id STRING, w INT, h INT, fmt STRING, caption STRING, "
-    "phash BIGINT) "
-    "USING parquet CLUSTERED BY (fkey_hash) "
-    "SORTED BY (fkey_hash) INTO {nb} BUCKETS LOCATION '{path}'"
-)
-
-
-def buckets_for(n_rows: int, rows_per_bucket: int = 250_000) -> int:
-    """Data-proportional bucket count (power of two, >= N_BUCKETS).
-    Partition sizing must track data volume: per-task memory is fixed, so
-    a bucket count chosen at 16M rows quadruples each task's working set
-    at 64M.  ~250k rows/bucket keeps every hash build and window sort
-    comfortably in a task's memory share at any parallelism."""
-    want = max(N_BUCKETS, -(-n_rows // rows_per_bucket))
-    return 1 << (want - 1).bit_length()
 
 
 def write_bucketed(
-    df: DataFrame, name: str, path: str, keys: list[str], n_buckets: int = N_BUCKETS
+    df: DataFrame, name: str, path: str, keys: list[str], n_buckets: int = 64
 ) -> None:
+    """Save ``df`` as catalog table ``name`` at ``path``, bucketed and
+    sorted on ``keys``: a join on those keys then reads it pre-
+    partitioned, so only the other side shuffles."""
     (
         df.repartition(n_buckets, *keys)  # one file per bucket
         .write.mode("overwrite")
@@ -257,385 +37,6 @@ def write_bucketed(
         .sortBy(*keys)
         .option("path", path)
         .saveAsTable(name)
-    )
-
-
-def attach_bucketed(
-    spark: SparkSession, name: str, ddl: str, path: str, n_buckets: int = N_BUCKETS
-) -> None:
-    """Register an existing bucketed table's layout in this session's
-    catalog (metadata only — no data touched)."""
-    spark.sql(ddl.format(name=name, nb=n_buckets, path=path))
-
-
-def _read_side(spark: SparkSession, path: str) -> DataFrame:
-    """'table:<name>' reads a catalog (bucketed) table; else parquet."""
-    if path.startswith("table:"):
-        return spark.table(path[len("table:"):])
-    return spark.read.parquet(path)
-
-
-def _seen_bloom_key(seen: DataFrame):
-    """Bloom key matching the seen layout: the hashed layout keys on the
-    8-byte key_hash (the string never enters the filter)."""
-    if "key_hash" in seen.columns:
-        return F.concat_ws(
-            "\x1f", F.col("seed_idx").cast("string"), F.col("key_hash").cast("string")
-        )
-    return F.concat_ws("\x1f", F.col("seed_idx").cast("string"), F.col("url_canon"))
-
-
-def build_seen_bloom(
-    spark: SparkSession, seen_path: str, n_bits: int, n_hashes: int = 7, n_shards: int = 64
-) -> ShardedBloom:
-    seen = _read_side(spark, seen_path)
-    bl = ShardedBloom(n_bits, n_hashes, n_shards)
-    key = _seen_bloom_key(seen)
-    # executor-side per-shard OR-merge first: the driver then collects
-    # exactly n_bits/8 bytes, not n_partitions copies of the filter
-    # (64M keys x 256 partitions of raw partials = ~20 GB = maxResultSize)
-    partials = reduce_partials(
-        build_partials(seen.withColumn("_bk", key), "_bk", n_bits, n_hashes, n_shards)
-    ).collect()
-    merge_partials_into(bl, partials)
-    return bl
-
-
-def run_frontier_round(
-    spark: SparkSession,
-    n_frontier: int,
-    seen_path: str,
-    store_path: str | None,
-    bl: ShardedBloom | None,
-    n_hosts: int = 1024,
-    host_budget: int = 20_000,
-    salt_buckets: int = 16,
-    space_unit: int | None = None,
-    stage: str = "full",
-    n_partitions: int = N_BUCKETS,
-    confirm: bool = True,
-) -> FrontierBenchResult:
-    """``stage`` truncates the round for the scaling breakdown
-    (bench_scaling --breakdown): "dedupe" stops after parse+dedupe,
-    "antijoin" after Bloom+seen anti-join, "budget" after the politeness
-    ranking, "full" (default) runs the whole round incl. the fetch
-    lookup join.  Each prefix ends in one count() action, so per-stage
-    cost = t(prefix_i) - t(prefix_{i-1}) across separate JVMs.
-
-    ``confirm`` (hashed layouts only, default ON): re-check every
-    hash-matched row on the retained string key so the 8-byte join is
-    exactness-preserving at ANY keyspace — see the CONFIRM PATH comment
-    in the body.  ``confirm=False`` keeps the r4 hash-only shape for
-    A/B measurement."""
-    from pyspark.sql.types import BooleanType
-
-    debug = os.environ.get("GRABSPARK_BENCH_DEBUG") == "1"
-
-    def _dbg(label: str, df):
-        if debug:
-            t = time.time()
-            n = df.count()
-            print(f"## stage {label}: +{time.time() - t:.2f}s n={n}", file=sys.stderr, flush=True)
-
-    cand_raw = synth_candidates(spark, n_frontier, n_hosts, space_unit)
-    seen_raw = _read_side(spark, seen_path)
-    # hashed layout: probe on the 8-byte key_hash only — the url_canon
-    # string stays in the table (confirm/audit path) but is pruned from
-    # the scan, cutting the per-round seen-table bytes ~7x
-    hashed = "key_hash" in seen_raw.columns
-    join_key = "key_hash" if hashed else "url_canon"
-    # shuffled-hash anti-join (r5, measured): the bucketed seen scan is
-    # already co-partitioned, so the only SMJ cost left was the per-task
-    # SORT of both sides on (seed_idx, key).  Building a hash map of the
-    # ~bucket-sized seen partition instead (bounded by buckets_for at
-    # any table size: ~250k rows x 12 B) removes both sorts — measured
-    # at 4M rows, local[32]: 312-324k -> 342-348k URLs/s confirmed,
-    # 387-419k -> 459-464k hash-only, identical scheduled rows.
-    seen = seen_raw.select("seed_idx", join_key).hint("shuffle_hash")
-    store = _read_side(spark, store_path) if store_path else None
-
-    t0 = time.time()
-    # ONE Arrow pass parses canon + host + fetch_key together (the regex
-    # dominates Python-side cost; three separate UDFs would parse 3x).
-    # PythonUDF is non-cheap so CollapseProject keeps a single evaluation.
-    cand = (
-        cand_raw.withColumn("_p", udfs.url_parts_udf(F.col("url")))
-        .select("*", "_p.url_canon", "_p.host", "_p.fetch_key")
-        .drop("_p")
-    )
-    # ONE exchange for the whole candidate stream: hash-partition on
-    # url_canon ALONE, matching the seen table's bucket spec.  The dedupe
-    # groupBy's ClusteredDistribution((seed_idx, url_canon)) is satisfied
-    # by the subset partitioning, and the anti-join is then co-partitioned
-    # with the bucketed seen scan — withOUT this, Catalyst plans TWO full
-    # shuffles of the candidates (one on (seed_idx, url_canon) for the
-    # aggregate, a second on url_canon for the join).  Measured at 16M
-    # rows: parse+dedupe+antijoin 17.9s -> 10.8s at local[16] (prefix
-    # scaling efficiency 0.53 -> 0.83 vs local[4]); at 100 TB this is the
-    # difference between shuffling the frontier once and twice per round.
-    # n_partitions must equal the seen/store tables' bucket count (the
-    # attach DDL) for the exchange-free co-partitioned joins below
-    might = None
-    key = F.concat_ws(
-        "\x1f",
-        F.col("seed_idx").cast("string"),
-        F.col("key_hash").cast("string") if hashed else F.col("url_canon"),
-    )
-    if bl is not None:
-        from .bloom import make_might_contain
-
-        might = make_might_contain(spark, bl)
-    # NOTE (measured, r3): probing on the MAP side of this exchange
-    # (tagging pre-shuffle so downstream re-reads are pure JVM) was
-    # tried and is WORSE at 16 threads (451k/183k vs 660k/672k urls/s
-    # interleaved) — it pushes the full pre-dedupe batch (1.4x rows)
-    # through a second Arrow boundary; the post-shuffle probe below
-    # touches only deduped rows.  Kept post-shuffle deliberately.
-    if hashed:
-        # key_hash must be a real column BEFORE the repartition so the
-        # partitioning expression is syntactically a subset of both the
-        # dedupe grouping keys and the anti-join keys (Catalyst's subset
-        # check is syntactic, not semantic)
-        cand = cand.withColumn("key_hash", F.xxhash64("url_canon"))
-        cand = cand.repartition(n_partitions, "key_hash")
-        # pre-dedupe frame kept for the confirm path: it sits directly on
-        # the round's single exchange, so the confirm branch re-reads
-        # shuffle files (ReusedExchange) instead of re-running the Arrow
-        # parse or the dedupe aggregate
-        cand_pre = cand
-        # dedupe stays EXACT (url_canon is still a grouping key — equal
-        # hashes with unequal urls do not merge); key_hash joins the keys
-        # only so the hash-partitioning satisfies the distribution
-        other = [
-            c for c in cand.columns if c not in ("seed_idx", "url_canon", "key_hash")
-        ]
-        cand = (
-            cand.groupBy("seed_idx", "key_hash", "url_canon")
-            .agg(
-                F.min_by(
-                    F.struct(*other), F.struct("parent_seq", "link_idx")
-                ).alias("_r")
-            )
-            .select("seed_idx", "key_hash", "url_canon", "_r.*")
-        )
-    else:
-        cand = cand.repartition(n_partitions, "url_canon")
-        cand = dedupe_first_occurrence(cand)
-    _dbg("dedupe", cand)
-
-    def _prefix_result(df) -> FrontierBenchResult:
-        n = df.count()
-        elapsed = time.time() - t0
-        return FrontierBenchResult(
-            n_frontier=n_frontier, n_seen=0, n_store=0, scheduled=n,
-            elapsed_sec=elapsed,
-            urls_per_sec=n_frontier / elapsed if elapsed > 0 else float("inf"),
-        )
-
-    if stage == "dedupe":
-        return _prefix_result(cand)
-    tagged = None
-    if bl is not None:
-        if os.environ.get("GRABSPARK_BLOOM_SPLIT") == "1":
-            # filter/persist/union form kept for A/B measurement: the two
-            # branches of the split must not recompute the
-            # canon/dedupe/bloom chain twice, so the tag is persisted —
-            # a full materialization of the candidate batch
-            tagged = cand.withColumn("_maybe", might(key)).persist()
-            survivors = tagged.filter(~F.col("_maybe")).drop("_maybe").unionByName(
-                tagged.filter(F.col("_maybe"))
-                .drop("_maybe")
-                .join(seen, ["seed_idx", join_key], "left_anti")
-            )
-        else:
-            # Bloom folded INTO the anti-join condition: a left-anti row
-            # survives when no seen row matches (keys AND _maybe), so a
-            # bloom-negative candidate passes through without a probe —
-            # same rows as the split form but ONE streaming pipeline:
-            # no persist (the split's full candidate materialization was
-            # the 16-thread memory wall), no union, and the equi-keys
-            # still co-partition with the bucketed seen scan (no
-            # exchange beyond the round's single candidate repartition).
-            t = cand.withColumn("_maybe", might(key))
-            survivors = t.join(
-                seen,
-                (t["seed_idx"] == seen["seed_idx"])
-                & (t[join_key] == seen[join_key])
-                & t["_maybe"],
-                "left_anti",
-            ).drop("_maybe")
-    else:
-        survivors = cand.join(seen, ["seed_idx", join_key], "left_anti")
-    if hashed and confirm:
-        # CONFIRM PATH (exactness at any keyspace): the hash-keyed
-        # anti-join is exact only up to 64-bit collisions — a candidate
-        # whose key_hash equals an UNRELATED seen row's hash is silently
-        # dropped (P ~ n_cand*n_seen/2^64 per round; percent-range at the
-        # north rule's 10^10-key frontier).  Re-check every hash-matched
-        # row on the url_canon string retained in the seen files, and
-        # restore the rows whose hash matched but whose string matched
-        # NOTHING (the collisions).  Shape matters here:
-        #   - the confirm branch consumes the SAME full-column candidate
-        #     exchange as the main branch (cand_pre, the round's single
-        #     repartition), so ReuseExchange dedupes the shuffle and the
-        #     Arrow URL parse runs ONCE — a pruned 3-column projection
-        #     would split the exchange and re-parse the whole batch;
-        #   - hash-matched rows come from an inner join against ONE
-        #     extra seen scan (seed_idx, key_hash, url_canon), probed
-        #     per-bucket (shuffled-hash, build = the ~250k-row seen
-        #     bucket, bounded by buckets_for at any table size; no
-        #     seen-side sort, no new exchange);
-        #   - the dedupe aggregate and the string check FUSE into one
-        #     group-by over the matched rows only (grouping keys contain
-        #     the partitioning key — no exchange), so restored rows come
-        #     out first-occurrence-deduped exactly like survivors.
-        # The main anti-join above is untouched — its seen scan still
-        # reads (seed_idx, key_hash) only (plan-guarded).
-        seen_str = seen_raw.select(
-            "seed_idx", "key_hash", F.col("url_canon").alias("_seen_url")
-        )
-        matched = cand_pre.join(
-            seen_str.hint("shuffle_hash"), ["seed_idx", "key_hash"], "inner"
-        )
-        m_other = [
-            c
-            for c in cand_pre.columns
-            if c not in ("seed_idx", "url_canon", "key_hash")
-        ]
-        restored = (
-            matched.groupBy("seed_idx", "key_hash", "url_canon")
-            .agg(
-                F.min_by(
-                    F.struct(*m_other), F.struct("parent_seq", "link_idx")
-                ).alias("_r"),
-                F.max(
-                    (F.col("_seen_url") == F.col("url_canon")).cast("int")
-                ).alias("_hit"),
-            )
-            .filter(F.col("_hit") == 0)
-            .select("seed_idx", "key_hash", "url_canon", "_r.*")
-        )
-        survivors = survivors.unionByName(restored.select(*survivors.columns))
-    if stage == "antijoin":
-        r = _prefix_result(survivors)
-        if tagged is not None:
-            tagged.unpersist()
-        return r
-    # persist IS the right call here (measured: dropping it and relying
-    # on exchange reuse re-runs the Python bloom probe + anti-join for
-    # each of the three budget-phase consumers — 551k/299k vs 689k/676k
-    # urls/s interleaved at local[16]).  Persist ONLY the scheduling
-    # columns: the budget phase reads this frame twice (light/heavy
-    # branches) and shuffles the heavy branch, so every retained byte is
-    # paid >= 3x — the raw url string (the widest column) and bookkeeping
-    # columns are not needed downstream (the fetch join keys on
-    # fetch_key; a real scheduler re-reads payload by key at fetch time).
-    # in hashed mode the 8-byte key_hash replaces url_canon entirely
-    # below this point (salting keys on it too) — the URL string never
-    # enters the persisted frame
-    ident = "key_hash" if hashed else "url_canon"
-    store_hashed = store is not None and "fkey_hash" in store.columns
-    if store_hashed:
-        # fixed-width scheduling frame: the fetch key is hashed too, so
-        # no string wider than the host label survives the anti-join.
-        # In confirm mode the fetch_key string rides along so the lookup
-        # join can re-check hash-matched store rows on image_id (the
-        # persist widens by one string — the measured price of a
-        # collision-proof fetch at the 10^10 keyspace).
-        survivors = survivors.withColumn("fk_hash", F.xxhash64("fetch_key"))
-        if not confirm:
-            survivors = survivors.drop("fetch_key")
-    fetch_col = "fk_hash" if store_hashed else "fetch_key"
-    sched_cols = [
-        c
-        for c in (
-            "seed_idx", ident, "host", "parent_seq", "link_idx", fetch_col,
-            "fetch_key" if store_hashed and confirm else None,
-        )
-        if c is not None and c in survivors.columns
-    ]
-    survivors = survivors.select(*sched_cols).persist()
-    _dbg("survivors", survivors)
-
-    # W1: the budget only binds on hosts with more than ``host_budget``
-    # rows — everything else bypasses the window entirely (no sort, no
-    # skewed straggler task).  Heavy hosts (the 30% hot host) go through
-    # the salted two-phase top-k: phase 1 bounds every window partition
-    # to <= budget rows, so the hot host costs salt_buckets parallel
-    # sorts plus one merge of salt_buckets*budget rows instead of one
-    # giant serial sort.
-    heavy_hosts = (
-        survivors.groupBy("host")
-        .agg(F.count(F.lit(1)).alias("_hn"))
-        .filter(F.col("_hn") > host_budget)
-        .select("host")
-    )
-    light = survivors.join(F.broadcast(heavy_hosts), "host", "left_anti")
-    heavy = survivors.join(F.broadcast(heavy_hosts), "host", "left_semi")
-    salt = F.pmod(F.xxhash64(ident), F.lit(salt_buckets))
-    w1 = Window.partitionBy("host", "_salt").orderBy("parent_seq", "link_idx")
-    phase1 = (
-        heavy.withColumn("_salt", salt)
-        .withColumn("_rk1", F.row_number().over(w1))
-        .filter(F.col("_rk1") <= host_budget)
-    )
-    w2 = Window.partitionBy("host").orderBy("parent_seq", "link_idx")
-    ranked = (
-        phase1.withColumn("_rk2", F.row_number().over(w2))
-        .filter(F.col("_rk2") <= host_budget)
-        .drop("_salt", "_rk1", "_rk2")
-    )
-    sched = light.unionByName(ranked)
-    _dbg("budget-rank", sched)
-    if stage == "budget":
-        r = _prefix_result(sched)
-        if tagged is not None:
-            tagged.unpersist()
-        survivors.unpersist()
-        return r
-    if store is not None:
-        if store_hashed and confirm:
-            # collision-proof fetch: the join also requires
-            # image_id == fetch_key, so a 64-bit collision between two
-            # image ids reads as a store MISS, never a wrong payload —
-            # exactly the string layout's rows.  shuffle_hash keeps the
-            # string OUT of any sort: the build side is one bucketed
-            # store partition (~250k rows, bounded by buckets_for at any
-            # table size), probed hash-first, the string compared only
-            # on hash-equal pairs.
-            sched = sched.join(
-                store.select("fkey_hash", "image_id", "fmt", "phash").hint(
-                    "shuffle_hash"
-                ),
-                (F.col("fk_hash") == F.col("fkey_hash"))
-                & (F.col("fetch_key") == F.col("image_id")),
-                "left",
-            ).drop("image_id")
-        elif store_hashed:
-            sched = sched.join(
-                store.select("fkey_hash", "fmt", "phash").hint("shuffle_hash"),
-                F.col("fk_hash") == F.col("fkey_hash"),
-                "left",
-            )
-        else:
-            sched = sched.join(
-                store.select("image_id", "fmt", "phash").hint("shuffle_hash"),
-                F.col("fetch_key") == F.col("image_id"),
-                "left",
-            )
-    n_sched = sched.count()
-    elapsed = time.time() - t0
-    if tagged is not None:
-        tagged.unpersist()
-    survivors.unpersist()
-
-    return FrontierBenchResult(
-        n_frontier=n_frontier,
-        n_seen=seen.count(),
-        n_store=store.count() if store is not None else 0,
-        scheduled=n_sched,
-        elapsed_sec=elapsed,
-        urls_per_sec=n_frontier / elapsed if elapsed > 0 else float("inf"),
     )
 
 

@@ -227,10 +227,10 @@ def reduce_partials(partials_df):
     regardless of how many input partitions built partials.  Without
     this, collecting raw partials ships (n_partitions x n_bits/8) bytes
     to the driver — at 64M keys x 256 partitions that is ~20 GB and
-    trips spark.driver.maxResultSize.  Use for large one-shot builds
-    (bench prepare); per-round engine updates keep the direct collect
-    (their new-key partials are small and the extra shuffle would sit on
-    the measured path)."""
+    trips spark.driver.maxResultSize.  A partial is n_bits/8 bytes
+    however few keys its partition held, so a per-round update over a
+    handful of new keys needs this as much as a full build: 16 host
+    buckets x a 2^30-bit filter is 2 GiB raw."""
     import pandas as pd
 
     def _or_group(pdf: pd.DataFrame) -> pd.DataFrame:

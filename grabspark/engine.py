@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from . import robots as robots_mod
 from . import seq as seq_mod
-from .bloom import ShardedBloom, build_partials, merge_partials_into
+from .bloom import ShardedBloom, build_partials, merge_partials_into, reduce_partials
 from .config import EngineConfig
 from .extract import FRONTIER_SCHEMA, dedupe_first_occurrence, links_to_frontier
 from .fetch import fetch_and_validate
@@ -112,7 +112,7 @@ class CrawlEngine:
         )
         self.metrics = SnapshotTable(spark, os.path.join(rd, "metrics"), METRICS_SCHEMA)
         # "table:<name>" reads a catalog table — register the page store
-        # as a bucketed table on image_id (bench_core.STORE_TBL_DDL) and
+        # as a bucketed table on image_id (bench_core.write_bucketed) and
         # the per-round fetch join reads it pre-partitioned, no exchange
         self.store = (
             spark.table(cfg.store_path[len("table:"):])
@@ -344,8 +344,8 @@ class CrawlEngine:
         # (subset key) and the seen anti-join's co-partitioning — without
         # it Catalyst re-shuffles the deduped candidates a second time
         # for the join (the r3 scaling breakdown's 0.30-efficiency
-        # stage; bench_core carries the same fix with the bucketed-seen
-        # layout that removes the seen-side exchange too).
+        # stage; tests/test_plans.py guards the shape, with a bucketed
+        # seen table that removes the seen-side exchange too).
         cand = dedupe_first_occurrence(f.repartition("url_canon"))
         seen_df = self.seen.read(meta["seen_v"]).select("seed_idx", "url_canon")
         counters: dict[str, float] = {"frontier_in": self.frontier.row_count()}
@@ -568,16 +568,15 @@ class CrawlEngine:
     def _bloom_broadcast_update(self, batch: DataFrame, bloom_v: int) -> int:
         # the saved version follows bloom_v, not the round number: a TTL
         # re-crawl also bumps bloom_v, so a round-numbered save could
-        # overwrite the version a committed round pins
-        partials = build_partials(
-            batch.withColumn("_bk", self._bloom_key()),
-            "_bk",
-            self.bloom.n_bits,
-            self.bloom.n_hashes,
-            self.bloom.n_shards,
-        ).collect()
-        merge_partials_into(self.bloom, partials)
-        self.bloom.save(self._bloom_dir(bloom_v + 1))
+        # overwrite the version a committed round pins.  Partials are
+        # OR-merged executor-side first: every non-empty input partition
+        # emits a full n_bits/8 bitmap however few keys it holds, and a
+        # round's trace batch has one partition per host bucket
+        b = self.bloom
+        keys = batch.withColumn("_bk", self._bloom_key())
+        partials = build_partials(keys, "_bk", b.n_bits, b.n_hashes, b.n_shards)
+        merge_partials_into(b, reduce_partials(partials).collect())
+        b.save(self._bloom_dir(bloom_v + 1))
         return bloom_v + 1
 
     # -- W1 ------------------------------------------------------------------

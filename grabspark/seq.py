@@ -27,20 +27,6 @@ from pyspark.sql import functions as F
 ORDER_COLS = ["parent_seq", "link_idx"]
 
 
-def assign_fetch_seq(
-    df: DataFrame,
-    seq_bases: dict[int, int],
-    n_rows: int,
-    threshold: int = 200_000,
-    n_partitions: int = 32,
-) -> DataFrame:
-    """Add ``fetch_seq``: per-seed contiguous numbering continuing from
-    ``seq_bases[seed_idx]`` in (parent_seq, link_idx) order."""
-    if n_rows <= threshold:
-        return _assign_window(df, seq_bases)
-    return _assign_distributed(df, seq_bases, n_partitions)
-
-
 def assign_fetch_seq_counted(
     df: DataFrame,
     seq_bases: dict[int, int],
@@ -94,17 +80,6 @@ def _assign_window(df: DataFrame, seq_bases: dict[int, int]) -> DataFrame:
     return df.withColumn(
         "fetch_seq", (F.row_number().over(w) - 1 + _base_expr(seq_bases)).cast("long")
     )
-
-
-def _assign_distributed(df: DataFrame, seq_bases: dict[int, int], n_partitions: int) -> DataFrame:
-    part = df.repartitionByRange(n_partitions, "seed_idx", *ORDER_COLS).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    part = part.persist()
-    counts = (
-        part.groupBy("_pid", "seed_idx").count().collect()
-    )  # n_partitions x n_seeds rows — tiny
-    return _assign_from_counts(part, seq_bases, counts)
 
 
 def _assign_from_counts(part: DataFrame, seq_bases: dict[int, int], counts) -> DataFrame:

@@ -68,7 +68,12 @@ def driver_memory() -> str:
 
 
 def default_session(app: str = "grabspark", cores: str | int = "*", shuffle_partitions: int | None = None) -> SparkSession:
-    """An opinionated local session: AQE on, Arrow on, UTC."""
+    """The bench scripts' local session: AQE on, Arrow on, UTC, no UI,
+    ``driver_memory()`` heap, ERROR log level.  Bucketed scans stay
+    bucketed even where Spark would judge them useless
+    (``autoBucketedScan`` off): ``dedup_incremental`` stores its corpus
+    bucketed on the band key (``ops.dedup._inc_corpus_tables``) so the
+    batch probe joins it without shuffling the corpus."""
     n = str(cores)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
@@ -77,10 +82,14 @@ def default_session(app: str = "grabspark", cores: str | int = "*", shuffle_part
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.memory", driver_memory())
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     attach_package(spark)
     return spark

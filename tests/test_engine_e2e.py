@@ -860,3 +860,30 @@ def test_recrawl_then_torn_round_keeps_pinned_bloom(spark, crawl_setup, filter_f
     seen = {(r.seed_idx, r.url_canon) for r in eng2.seen_df().collect()}
     assert seen == golden.seen
     assert eng2.trace.row_count() == len(golden.trace) + n_expired
+
+
+def test_bloom_update_collects_one_row_per_shard(spark, crawl_setup, filter_forced_on, tmp_path, monkeypatch):
+    """A broadcast Bloom update OR-merges its partials executor-side, so
+    the driver receives at most one row per shard however many input
+    partitions (a round's trace batch has one per host bucket) built
+    them; the crawl and the filter's key count stay as they were."""
+    from grabspark import engine as engine_mod
+
+    spec, store, store_path, seeds, golden, base = crawl_setup
+    bloom = BloomConfig(enabled=True)
+    rows_per_merge = []
+    merge = engine_mod.merge_partials_into
+
+    def spy(b, rows):
+        rows_per_merge.append(len(rows))
+        return merge(b, rows)
+
+    monkeypatch.setattr(engine_mod, "merge_partials_into", spy)
+    eng = run_engine(spark, store_path, seeds, tmp_path / "run", bloom=bloom)
+    monkeypatch.undo()
+    assert len(rows_per_merge) >= 3  # one update per round, several rounds
+    assert max(rows_per_merge) <= bloom.n_shards
+    assert engine_trace_rows(eng) == [tuple(t) for t in golden.trace]
+    seen = {(r.seed_idx, r.url_canon) for r in eng.seen_df().collect()}
+    assert seen == golden.seen
+    assert filter_key_count(eng) == len(golden.seen)

@@ -274,6 +274,23 @@ def test_incremental_corpus_band_join_no_exchange_on_corpus(spark):
         spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
 
 
+def _url_of(k):
+    """A page URL over 16 hosts for integer column ``k``."""
+    return F.concat(
+        F.lit("http://h"), (k % 16).cast("string"), F.lit(".test/p"), k.cast("string")
+    )
+
+
+def _seen_rows(spark, n):
+    """``n`` seen-table rows of seed 0, one per page ``0..n-1``."""
+    return spark.range(n).select(
+        F.lit(0).alias("seed_idx"),
+        _url_of(F.col("id")).alias("url_canon"),
+        F.col("id").alias("first_seq"),
+        F.lit(0).alias("round"),
+    )
+
+
 def test_bucketed_seen_join_has_no_exchange_on_big_side(spark, tmp_path):
     """The scale layout (BENCH/BASELINE.md): seen stored bucketed on
     url_canon means the per-round anti-join shuffles ONLY the candidate
@@ -286,9 +303,7 @@ def test_bucketed_seen_join_has_no_exchange_on_big_side(spark, tmp_path):
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
         name, path = "seen_plan_guard", str(tmp_path / "seen_tbl")
-        bench_core.write_bucketed(
-            bench_core.synth_seen_df(spark, 5000, 5000, 16), name, path, ["url_canon"]
-        )
+        bench_core.write_bucketed(_seen_rows(spark, 5000), name, path, ["url_canon"])
         cand = spark.createDataFrame(
             [(0, f"http://h{i % 16}.test/p{i}") for i in range(100)],
             "seed_idx int, url_canon string",
@@ -309,7 +324,7 @@ def test_bucketed_seen_join_has_no_exchange_on_big_side(spark, tmp_path):
 
 
 def test_frontier_round_prefix_is_one_exchange(spark, tmp_path):
-    """The bench round's candidate stream must shuffle ONCE: the explicit
+    """A round's candidate stream must shuffle ONCE: the explicit
     url_canon repartition feeds both the dedupe aggregate (subset-key
     ClusteredDistribution) and the anti-join against the url_canon-
     bucketed seen table (co-partitioned).  Without the repartition,
@@ -324,16 +339,26 @@ def test_frontier_round_prefix_is_one_exchange(spark, tmp_path):
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try:
         name, path = "seen_onex_guard", str(tmp_path / "seen_tbl")
-        bench_core.write_bucketed(
-            bench_core.synth_seen_df(spark, 2000, 2000, 16), name, path, ["url_canon"]
-        )
+        bench_core.write_bucketed(_seen_rows(spark, 2000), name, path, ["url_canon"])
         seen = spark.table(name).select("seed_idx", "url_canon")
+        # 1000 rows over 700 pages, every fifth with a trailing slash:
+        # dedupe and canonicalisation both have work to do
+        k = F.col("id") % 700
         cand = (
-            bench_core.synth_candidates(spark, 1000, 16)
+            spark.range(1000)
+            .select(
+                F.lit(0).alias("seed_idx"),
+                F.concat(
+                    _url_of(k), F.when(k % 5 == 0, F.lit("/")).otherwise(F.lit(""))
+                ).alias("url"),
+                F.col("id").alias("parent_seq"),
+                F.lit(0).alias("link_idx"),
+                F.lit(0).alias("birth_round"),
+            )
             .withColumn("_p", udfs.url_parts_udf(F.col("url")))
             .select("*", "_p.url_canon", "_p.host", "_p.fetch_key")
             .drop("_p")
-            .repartition(bench_core.N_BUCKETS, "url_canon")
+            .repartition(64, "url_canon")  # write_bucketed's bucket count
         )
         j = dedupe_first_occurrence(cand).join(
             seen, ["seed_idx", "url_canon"], "left_anti"

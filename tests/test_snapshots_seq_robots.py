@@ -169,13 +169,41 @@ def _seqs(df):
     return out
 
 
-def test_window_and_distributed_seq_agree(spark, seq_frontier):
+@pytest.fixture()
+def counted(spark, monkeypatch):
+    """``assign_fetch_seq_counted`` as ``(seqs, n_sched, per_seed,
+    branch)``: ``branch`` is "window" or "distributed", whichever the
+    threshold picked."""
+    branches = []
+    real = seq_mod._assign_from_counts
+
+    def spy(*args, **kwargs):
+        branches.append("distributed")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(seq_mod, "_assign_from_counts", spy)
+
+    def run(df, bases, threshold, n_partitions=4):
+        branches.clear()
+        out, n, per_seed = seq_mod.assign_fetch_seq_counted(df, bases, threshold, n_partitions)
+        seqs = _seqs(out)
+        spark.catalog.clearCache()  # the range-partitioned input it persisted
+        return seqs, n, per_seed, branches[0] if branches else "window"
+
+    return run
+
+
+# thresholds that force each branch of assign_fetch_seq_counted
+_WINDOW, _DISTRIBUTED = 10**9, 0
+
+
+def test_window_and_distributed_seq_agree(seq_frontier, counted):
     bases = {0: 10, 1: 0}
-    w = seq_mod._assign_window(seq_frontier, bases)
-    d = seq_mod._assign_distributed(seq_frontier, bases, 4)
-    assert _seqs(w) == _seqs(d)
+    got, _, _, branch_w = counted(seq_frontier, bases, _WINDOW)
+    d, _, _, branch_d = counted(seq_frontier, bases, _DISTRIBUTED)
+    assert (branch_w, branch_d) == ("window", "distributed")
+    assert got == d
     # contiguous per seed, starting at the base
-    got = _seqs(w)
     s0 = sorted(v for (s, _), v in got.items() if s == 0)
     assert s0 == list(range(10, 10 + len(s0)))
     # FIFO order: (-1, 0) sorts first within seed 1
@@ -183,7 +211,7 @@ def test_window_and_distributed_seq_agree(spark, seq_frontier):
     assert first[0][1] == "u1--1-0"
 
 
-def test_window_and_distributed_seq_agree_many_seeds(spark):
+def test_window_and_distributed_seq_agree_many_seeds(spark, counted):
     """The per-seed base expression at >=100 seeds: nonzero bases, zero
     bases, seeds missing from the base map and a seed past its last key
     all number identically on both paths, contiguously from the base."""
@@ -197,17 +225,25 @@ def test_window_and_distributed_seq_agree_many_seeds(spark):
     ]
     df = spark.createDataFrame(rows, FRONTIER_SCHEMA).repartition(5)
     bases = {s: (s * 37) % 1000 for s in range(0, n_seeds - 10) if s % 7}
-    w = _seqs(seq_mod._assign_window(df, bases))
-    assert w == _seqs(seq_mod._assign_distributed(df, bases, 4))
+    w, _, _, branch_w = counted(df, bases, _WINDOW)
+    d, _, _, branch_d = counted(df, bases, _DISTRIBUTED)
+    assert (branch_w, branch_d) == ("window", "distributed")
+    assert w == d
     for seed in range(n_seeds):
         b = bases.get(seed, 0)
         assert [w[(seed, f"u{seed}-{ps}")] for ps in (0, 1, 2)] == [b, b + 1, b + 2]
 
 
-def test_assign_auto_threshold(spark, seq_frontier):
-    small = seq_mod.assign_fetch_seq(seq_frontier, {}, n_rows=10, threshold=100)
-    big = seq_mod.assign_fetch_seq(seq_frontier, {}, n_rows=1000, threshold=100, n_partitions=3)
-    assert _seqs(small) == _seqs(big)
+def test_assign_auto_threshold(seq_frontier, counted):
+    """A round of n rows takes the window at threshold n and the
+    distributed path just below it, numbering identically."""
+    n = seq_frontier.count()
+    small, n_small, per_small, branch_small = counted(seq_frontier, {}, n)
+    big, n_big, per_big, branch_big = counted(seq_frontier, {}, n - 1, n_partitions=3)
+    assert (branch_small, branch_big) == ("window", "distributed")
+    assert small == big
+    assert n_small == n_big == n
+    assert per_small == per_big == {0: n // 2, 1: n // 2}
 
 
 # -- robots ------------------------------------------------------------------
